@@ -562,10 +562,12 @@ def kcore_peel(
     overwhelming majority of sub-core nodes). Per round: one degree
     aggregate + two semi joins restricting edges to surviving endpoints
     — the same two-shuffle step as a PageRank round, O(|E|) per round.
-    Each round is materialized with a lazy localCheckpoint whose action
-    doubles as the trigger to release the PREVIOUS round's edge cache —
-    executor storage holds at most two edge sets at any point instead of
-    ``rounds``+1 (the round-2 leak: persist-per-round with no unpersist).
+    Each round is one job: an eager localCheckpoint (``_ckpt``,
+    ``eager=True``) materializes the surviving edges (the first round also
+    fills the lazily checkpointed input edge set), and only then is the
+    PREVIOUS round's checkpoint released — executor storage holds at most
+    two edge sets at any point instead of ``rounds``+1 (the round-2 leak:
+    persist-per-round with no unpersist).
     """
     und = (
         edges.select(
@@ -807,10 +809,12 @@ def bfs_layers(
     anti-joins away already-settled nodes, and unions into the settled
     set — so every edge is traversed at most once per endpoint discovery
     and the per-round shuffle is O(frontier boundary), not O(settled).
-    Rounds are lazily localCheckpointed and materialized by the
-    frontier-count probe (one job per round, same discipline as
-    connected_components), with the previous round's cache released;
-    early exit when the frontier empties."""
+    Each round's new frontier goes through ``_ckpt_probe``: one job
+    eagerly localCheckpoints it and, through an ``observe`` inside the
+    checkpointed plan, also returns its row count. An empty frontier
+    exits early; otherwise the settled set plus the frontier is eagerly
+    checkpointed (a second job) and the previous settled set and frontier
+    are released."""
     settled = (
         seeds.select(F.col("node"), F.lit(0).cast("int").alias("dist"))
         .distinct()

@@ -1,25 +1,42 @@
 """Curated → consumption star schema (reference step_5 parity).
 
-Builds six dimensions + sales_fact
+Six dimensions + sales_fact
 (/root/reference/step_5_curated_to_consumption.py:51-591; DDL
-8. Consumption Layer.sql:9-99). Spark-first deviations, same results:
+8. Consumption Layer.sql:9-123). The schema's shape is written down once,
+in ``DIMS``: an ordered table of ``DimSpec`` entries, one per dimension in
+DDL order (region, product, promo code, customer, payment, date). A spec
+names the table, its surrogate key, the frame builder that derives the
+dim's rows from the curated union, the natural key (delta-load key and
+surrogate-key order), the fact's join keys, and — region only — the
+faithful delta key. Everything else is generic over the table:
+
+- ``load_dim`` delta-loads any spec: a broadcast left-anti join against
+  the existing dim (J4/J5; faithful region anti-joins on Country only,
+  §2.11.6), dense keys continuing from max(pk), conditional append (S15).
+  ``build_dims`` runs it for every spec.
+- ``star`` joins sales rows to one frame per spec on its fact keys, a
+  chain of BROADCAST inner joins (J6): dims are orders of magnitude
+  smaller than the fact, so the fact never shuffles. ``build_fact`` feeds
+  it the stored dims, plans.pipeline_ops.pipeline_star_counts the lazy
+  dim frames. The reference joins date first; inner equi-joins commute,
+  so joining in table order yields the same rows.
+
+Spark-first deviations, same results:
 
 - the date dim is built distributed (operators.datespine) instead of the
   reference's driver-side pandas (its create_date_dim also crashes as
   written — SURVEY §2.11.4; we implement what it *intends*, with the DDL's
   faithful column names incl. ``oder_month``/``order_quater``).
 - groupBy().count() dim uniquification keeps the reference shape (A1); the
-  count column is dropped by the final projection exactly as there.
-- every dim delta-load is a broadcast left-anti join (J4/J5), with the
-  faithful Country-only key for region_dim (§2.11.6).
-- the fact assembly is a chain of BROADCAST inner joins (J6): dims are
-  orders of magnitude smaller than the fact, so the fact never shuffles.
-- surrogate keys: dense row_number+offset for dims (small by construction);
-  the fact key is dense by default for parity but ``dense_fact_keys=False``
-  switches to fully-parallel unique keys for the 100 TB profile (§7.3.1).
+  count column is dropped by the frame's projection exactly as there.
+- surrogate keys are dense row_number+offset, for dims (small by
+  construction) and for the fact.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,147 +49,72 @@ from ..operators.star import star_join
 from ..sources.sinks import save_table_if_nonempty
 from .config import PROFILES, curated_table
 
-_DIM = "consumption.{}"
+
+@dataclass(frozen=True)
+class DimSpec:
+    """One dimension of the star schema."""
+
+    name: str  # pipeline_star_counts reports the row count as n_<name>
+    table: str
+    pk: str
+    # curated sales → one row per natural key: the stored columns after pk
+    frame: Callable[[DataFrame], DataFrame]
+    natural_key: list[str]  # delta-load key and surrogate-key order
+    fact_keys: list[str]  # USING columns of the fact's join to this dim
+    faithful_delta_key: list[str] | None = None
+
+    def delta_key(self, faithful: bool) -> list[str]:
+        if faithful and self.faithful_delta_key:
+            return self.faithful_delta_key
+        return self.natural_key
 
 
-def _existing(spark: SparkSession, table: str, cols: list[str]) -> DataFrame | None:
-    name = _DIM.format(table)
-    if not spark.catalog.tableExists(name):
-        return None
-    return spark.table(name).select(*cols)
-
-
-def _delta_then_key(
-    spark: SparkSession,
-    fresh: DataFrame,
-    table: str,
-    anti_keys: list[str],
-    pk: str,
-    order_cols: list[str],
-) -> DataFrame:
-    """Shared dim tail: left-anti against the existing dim (J4/J5), then
-    sequence keys continuing from max(pk)."""
-    existing = _existing(spark, table, anti_keys)
-    if existing is not None:
-        fresh = new_rows(fresh, existing, anti_keys)
-    keyed = dense_keys(
-        fresh, pk, order_by=[F.col(c) for c in order_cols],
-        start=next_start(spark, _DIM.format(table), pk),
-    )
-    return keyed
-
-
-def all_sales(spark: SparkSession, faithful: bool = True) -> DataFrame:
-    """UNION of the three curated tables — deduplicating in faithful mode
-    (Snowpark union semantics, U1) else UNION ALL."""
-    dfs = [spark.table(curated_table(cc)) for cc in PROFILES]
-    return union_distinct(*dfs) if faithful else union_all(*dfs)
-
-
-def region_dim_frame(sales: DataFrame) -> DataFrame:
-    return (
-        sales.groupBy("country", "region")
-        .count()
-        .withColumn("isactive", F.lit("Y"))
+def _promo_na(sales: DataFrame) -> DataFrame:
+    return sales.withColumn(
+        "promotion_code", F.coalesce(F.col("promotion_code"), F.lit("NA"))
     )
 
 
-def create_region_dim(spark, sales: DataFrame, faithful: bool = True) -> None:
-    dim = region_dim_frame(sales)
-    anti = ["country"] if faithful else ["country", "region"]  # §2.11.6
-    keyed = _delta_then_key(
-        spark, dim, "region_dim", anti, "region_id_pk", ["country", "region"]
-    )
-    save_table_if_nonempty(
-        keyed.select("region_id_pk", "country", "region", "isactive"),
-        _DIM.format("region_dim"),
-    )
-
-
-def product_dim_frame(sales: DataFrame) -> DataFrame:
+def _mobile_key_parts(sales: DataFrame) -> DataFrame:
     key = F.split(F.col("mobile_key"), "/")
-    return (
-        sales.withColumns(
-            {
-                "brand": key.getItem(0).cast("string"),
-                "model": key.getItem(1).cast("string"),
-                "color": key.getItem(2).cast("string"),
-                "memory": key.getItem(3).cast("string"),  # storage segment dropped
-            }
+    return sales.withColumns(
+        {
+            "brand": key.getItem(0).cast("string"),
+            "model": key.getItem(1).cast("string"),
+            "color": key.getItem(2).cast("string"),
+            "memory": key.getItem(3).cast("string"),  # storage segment dropped
+        }
+    )
+
+
+def _grouped(
+    name: str,
+    table: str,
+    pk: str,
+    key: list[str],
+    fact_keys: list[str],
+    derive: Callable[[DataFrame], DataFrame] = lambda sales: sales,
+    faithful_delta_key: list[str] | None = None,
+) -> DimSpec:
+    """A groupBy dim: (pk, *key, isactive='Y') over the distinct ``key``
+    values of ``derive(sales)``."""
+
+    def frame(sales: DataFrame) -> DataFrame:
+        return (
+            derive(sales)
+            .groupBy(*key)
+            .count()
+            .select(*key, F.lit("Y").alias("isactive"))
         )
-        .groupBy("mobile_key", "brand", "model", "color", "memory")
-        .count()
-        .withColumn("isactive", F.lit("Y"))
-    )
+
+    return DimSpec(name, table, pk, frame, key, fact_keys, faithful_delta_key)
 
 
-def create_product_dim(spark, sales: DataFrame) -> None:
-    dim = product_dim_frame(sales)
-    cols = ["mobile_key", "brand", "model", "color", "memory"]
-    keyed = _delta_then_key(spark, dim, "product_dim", cols, "product_id_pk", cols)
-    save_table_if_nonempty(
-        keyed.select("product_id_pk", *cols, "isactive"),
-        _DIM.format("product_dim"),
-    )
-
-
-def promocode_dim_frame(sales: DataFrame) -> DataFrame:
-    return (
-        sales.withColumn(
-            "promotion_code", F.coalesce(F.col("promotion_code"), F.lit("NA"))
-        )
-        .groupBy("promotion_code", "country", "region")
-        .count()
-        .withColumn("isactive", F.lit("Y"))
-    )
-
-
-def create_promocode_dim(spark, sales: DataFrame) -> None:
-    dim = promocode_dim_frame(sales)
-    cols = ["promotion_code", "country", "region"]
-    keyed = _delta_then_key(spark, dim, "promo_code_dim", cols, "promo_code_id_pk", cols)
-    save_table_if_nonempty(
-        keyed.select("promo_code_id_pk", *cols, "isactive"),
-        _DIM.format("promo_code_dim"),
-    )
-
-
-def customer_dim_frame(sales: DataFrame) -> DataFrame:
-    cols = ["customer_name", "conctact_no", "shipping_address", "country", "region"]
-    return sales.groupBy(*cols).count().withColumn("isactive", F.lit("Y"))
-
-
-def create_customer_dim(spark, sales: DataFrame) -> None:
-    cols = ["customer_name", "conctact_no", "shipping_address", "country", "region"]
-    dim = customer_dim_frame(sales)
-    keyed = _delta_then_key(spark, dim, "customer_dim", cols, "customer_id_pk", cols)
-    save_table_if_nonempty(
-        keyed.select("customer_id_pk", *cols, "isactive"),
-        _DIM.format("customer_dim"),
-    )
-
-
-def payment_dim_frame(sales: DataFrame) -> DataFrame:
-    cols = ["payment_method", "payment_provider", "country", "region"]
-    return sales.groupBy(*cols).count().withColumn("isactive", F.lit("Y"))
-
-
-def create_payment_dim(spark, sales: DataFrame) -> None:
-    cols = ["payment_method", "payment_provider", "country", "region"]
-    dim = payment_dim_frame(sales)
-    keyed = _delta_then_key(spark, dim, "payment_dim", cols, "payment_id_pk", cols)
-    save_table_if_nonempty(
-        keyed.select("payment_id_pk", *cols, "isactive"),
-        _DIM.format("payment_dim"),
-    )
-
-
-def create_date_dim(spark, sales: DataFrame) -> None:
+def _date_frame(sales: DataFrame) -> DataFrame:
     """Distributed date dim with the DDL's faithful names (typos included:
     oder_month, order_quater — 8. Consumption Layer.sql:69-70). DayOfWeek
     follows the reference's pandas semantics: Monday=0, Weekend={5,6}."""
-    spine = date_spine(sales, "order_dt")
-    dim = spine.select(
+    return date_spine(sales, "order_dt").select(
         F.col("order_dt"),
         F.col("order_year"),
         F.col("day_counter"),
@@ -184,29 +126,80 @@ def create_date_dim(spark, sales: DataFrame) -> None:
         F.col("order_day").alias("order_dayofmonth"),
         F.col("order_daytype").alias("order_weekday"),
     )
-    keyed = _delta_then_key(
-        spark, dim, "date_dim", ["order_dt"], "date_id_pk", ["order_dt"]
+
+
+DIMS: tuple[DimSpec, ...] = (
+    _grouped(
+        "region", "consumption.region_dim", "region_id_pk",
+        ["country", "region"], ["country", "region"],
+        faithful_delta_key=["country"],  # §2.11.6
+    ),
+    _grouped(
+        "product", "consumption.product_dim", "product_id_pk",
+        ["mobile_key", "brand", "model", "color", "memory"], ["mobile_key"],
+        derive=_mobile_key_parts,
+    ),
+    _grouped(
+        "promo", "consumption.promo_code_dim", "promo_code_id_pk",
+        ["promotion_code", "country", "region"],
+        ["promotion_code", "country", "region"],
+        derive=_promo_na,
+    ),
+    # joined on (name, country, region) only: same-name customers fan the
+    # fact rows out, as in the reference
+    _grouped(
+        "customer", "consumption.customer_dim", "customer_id_pk",
+        ["customer_name", "conctact_no", "shipping_address", "country", "region"],
+        ["customer_name", "region", "country"],
+    ),
+    _grouped(
+        "payment", "consumption.payment_dim", "payment_id_pk",
+        ["payment_method", "payment_provider", "country", "region"],
+        ["payment_method", "payment_provider", "country", "region"],
+    ),
+    DimSpec(
+        "date", "consumption.date_dim", "date_id_pk", _date_frame,
+        ["order_dt"], ["order_dt"],
+    ),
+)
+
+
+def all_sales(spark: SparkSession, faithful: bool = True) -> DataFrame:
+    """UNION of the three curated tables — deduplicating in faithful mode
+    (Snowpark union semantics, U1) else UNION ALL."""
+    dfs = [spark.table(curated_table(cc)) for cc in PROFILES]
+    return union_distinct(*dfs) if faithful else union_all(*dfs)
+
+
+def load_dim(
+    spark: SparkSession, spec: DimSpec, sales: DataFrame, faithful: bool = True
+) -> None:
+    """Append the rows of ``spec.frame(sales)`` whose delta key the dim
+    does not hold yet, keyed densely from max(pk) + 1."""
+    rows = spec.frame(sales)
+    cols = rows.columns
+    key = spec.delta_key(faithful)
+    if spark.catalog.tableExists(spec.table):
+        rows = new_rows(rows, spark.table(spec.table).select(*key), key)
+    keyed = dense_keys(
+        rows, spec.pk, spec.natural_key, start=next_start(spark, spec.table, spec.pk)
     )
-    save_table_if_nonempty(
-        keyed.select(
-            "date_id_pk", "order_dt", "order_year", "day_counter", "oder_month",
-            "order_quater", "order_day", "order_dayofweek", "order_dayname",
-            "order_dayofmonth", "order_weekday",
-        ),
-        _DIM.format("date_dim"),
-    )
+    save_table_if_nonempty(keyed.select(spec.pk, *cols), spec.table)
 
 
 def build_dims(spark, sales: DataFrame, faithful: bool = True) -> None:
     """step_5 dim phase. The reference calls create_date_dim twice
     (§2.11.5) — the second call is a no-op under the delta load, so one
     call is result-identical."""
-    create_date_dim(spark, sales)
-    create_region_dim(spark, sales, faithful)
-    create_product_dim(spark, sales)
-    create_promocode_dim(spark, sales)
-    create_customer_dim(spark, sales)
-    create_payment_dim(spark, sales)
+    for spec in DIMS:
+        load_dim(spark, spec, sales, faithful)
+
+
+def star(sales: DataFrame, dims: list[DataFrame]) -> DataFrame:
+    """``sales`` (null promo codes read 'NA', as in the promo dim) inner-
+    joined to ``dims[i]`` on ``DIMS[i].fact_keys``, every dim broadcast."""
+    pairs = [(dim, spec.fact_keys) for spec, dim in zip(DIMS, dims, strict=True)]
+    return star_join(_promo_na(sales), pairs, how="inner")
 
 
 _WM_TABLE = "audit.fact_load_watermark"
@@ -249,57 +242,26 @@ def _record_fact_watermark(spark, processed: DataFrame) -> None:
     )
 
 
+_FACT = "consumption.sales_fact"
+
+
 def build_fact(spark, sales: DataFrame, dense_fact_keys: bool = True) -> None:
-    """Star-join fact assembly (J6) + fact sequence key."""
-    dims = [
-        (spark.table(_DIM.format("date_dim")).select("date_id_pk", "order_dt"), ["order_dt"]),
-        (
-            spark.table(_DIM.format("customer_dim")).select(
-                "customer_id_pk", "customer_name", "country", "region"
-            ),
-            ["customer_name", "region", "country"],
-        ),
-        (
-            spark.table(_DIM.format("payment_dim")).select(
-                "payment_id_pk", "payment_method", "payment_provider", "country", "region"
-            ),
-            ["payment_method", "payment_provider", "country", "region"],
-        ),
-        (
-            spark.table(_DIM.format("product_dim")).select("product_id_pk", "mobile_key"),
-            ["mobile_key"],
-        ),
-        (
-            spark.table(_DIM.format("promo_code_dim")).select(
-                "promo_code_id_pk", "promotion_code", "country", "region"
-            ),
-            ["promotion_code", "country", "region"],
-        ),
-        (
-            spark.table(_DIM.format("region_dim")).select("region_id_pk", "country", "region"),
-            ["country", "region"],
-        ),
-    ]
-    enriched = star_join(
-        sales.withColumn(
-            "promotion_code", F.coalesce(F.col("promotion_code"), F.lit("NA"))
-        ),
-        dims,
-        how="inner",
+    """Star-join fact assembly (J6) + fact sequence key. Only
+    perfbench/elt.py passes ``dense_fact_keys`` (True, positionally);
+    ``False`` would switch to sparse fully-parallel keys (§7.3.1)."""
+    enriched = star(
+        sales, [spark.table(d.table).select(d.pk, *d.fact_keys) for d in DIMS]
     )
+    start = next_start(spark, _FACT, "order_id_pk")
     if dense_fact_keys:
         keyed = dense_keys(
             enriched,
             "order_id_pk",
             order_by=[F.col("country"), F.col("sales_order_key")],
-            start=next_start(spark, _DIM.format("sales_fact"), "order_id_pk"),
+            start=start,
         )
     else:
-        keyed = unique_keys(
-            enriched,
-            "order_id_pk",
-            start=next_start(spark, _DIM.format("sales_fact"), "order_id_pk"),
-        )
+        keyed = unique_keys(enriched, "order_id_pk", start=start)
     fact = keyed.select(
         "order_id_pk",
         F.col("order_id").alias("order_code"),
@@ -316,14 +278,11 @@ def build_fact(spark, sales: DataFrame, dense_fact_keys: bool = True) -> None:
         "us_total_order_amt",
         "usd_tax_amt",
     )
-    save_table_if_nonempty(fact, _DIM.format("sales_fact"))
+    save_table_if_nonempty(fact, _FACT)
 
 
 def run_consumption(
-    spark: SparkSession,
-    faithful: bool = True,
-    dense_fact_keys: bool = True,
-    incremental: bool = False,
+    spark: SparkSession, faithful: bool = True, incremental: bool = False
 ) -> None:
     """step_5 main(): dims then fact. Dims are always incremental (delta
     loads); ``incremental=True`` additionally guards the fact append with
@@ -333,7 +292,7 @@ def run_consumption(
     build_dims(spark, sales, faithful)
     if incremental:
         fresh = _apply_fact_watermark(spark, sales)
-        build_fact(spark, fresh, dense_fact_keys)
+        build_fact(spark, fresh)
         _record_fact_watermark(spark, fresh)
     else:
-        build_fact(spark, sales, dense_fact_keys)
+        build_fact(spark, sales)

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..operators.sequences import dense_keys, next_start
 from ..sources.ledger import filter_new_files, record_loaded_files
 from ..sources.readers import read_sales_raw
-from ..sources.sinks import save_table_if_nonempty
+from ..sources.sinks import save_table
 from .config import PROFILES, CountryProfile, source_table
 
 
@@ -97,7 +97,7 @@ def commit_ingest(
         start=start,
     ).withColumn("sales_order_key", F.col("sales_order_key").cast("decimal(38,0)"))
     out = keyed.select("sales_order_key", *shaped.columns)
-    save_table_if_nonempty(out, target)
+    save_table(out, target)  # non-empty: fresh was checked above
     n_files = fresh.select("_metadata_file_name").distinct().count()
     record_loaded_files(spark, fresh, target)
     return n_files

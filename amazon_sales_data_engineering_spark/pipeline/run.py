@@ -25,7 +25,6 @@ def run_pipeline(
     spark: SparkSession,
     data_root: str,
     faithful: bool = True,
-    dense_fact_keys: bool = True,
     incremental: bool = False,
 ) -> dict[str, int]:
     """raw files → source → curated → consumption. Returns per-country
@@ -41,5 +40,5 @@ def run_pipeline(
     loaded = ingest_all(spark, data_root)
     if any(loaded.values()):
         run_curated(spark, faithful, incremental)
-        run_consumption(spark, faithful, dense_fact_keys, incremental)
+        run_consumption(spark, faithful, incremental)
     return loaded

@@ -32,18 +32,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.datespine import date_spine
 from ..operators.sequences import dense_keys
 from ..operators.setops import union_distinct
-from ..operators.star import star_join
 from ..pipeline.config import PROFILES
-from ..pipeline.consumption import (
-    customer_dim_frame,
-    payment_dim_frame,
-    product_dim_frame,
-    promocode_dim_frame,
-    region_dim_frame,
-)
+from ..pipeline.consumption import DIMS, star
 from ..pipeline.curated import curated_frame
 from ..pipeline.ingest import _source_select
 from ..sources.readers import forex_table, read_sales_raw
@@ -312,45 +304,11 @@ def pipeline_star_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r11, plans/r11/pipeline_star_counts_before.txt). The curated
     # table is reference-dataset sized; build it once.
     sales = _curated_all(spark).persist()
-    region = region_dim_frame(sales).select("country", "region")
-    product = product_dim_frame(sales).select(
-        "mobile_key", "brand", "model", "color", "memory"
-    )
-    promo = promocode_dim_frame(sales).select("promotion_code", "country", "region")
-    customer = customer_dim_frame(sales).select(
-        "customer_name",
-        "country",
-        "region",
-        F.col("conctact_no").alias("_dim_contact"),
-        F.col("shipping_address").alias("_dim_address"),
-    )
-    payment = payment_dim_frame(sales).select(
-        "payment_method", "payment_provider", "country", "region"
-    )
-    spine = date_spine(sales, "order_dt").select("order_dt")
-
-    fact = star_join(
-        sales.withColumn(
-            "promotion_code", F.coalesce(F.col("promotion_code"), F.lit("NA"))
-        ),
-        [
-            (spine, ["order_dt"]),
-            (customer, ["customer_name", "region", "country"]),
-            (payment, ["payment_method", "payment_provider", "country", "region"]),
-            (product.select("mobile_key"), ["mobile_key"]),
-            (promo, ["promotion_code", "country", "region"]),
-            (region, ["country", "region"]),
-        ],
-        how="inner",
-    )
-
+    frames = [spec.frame(sales) for spec in DIMS]
+    fact = star(sales, [f.select(*spec.fact_keys) for spec, f in zip(DIMS, frames)])
     counts = [
-        region.agg(F.count(F.lit(1)).alias("n_region")),
-        product.agg(F.count(F.lit(1)).alias("n_product")),
-        promo.agg(F.count(F.lit(1)).alias("n_promo")),
-        customer.agg(F.count(F.lit(1)).alias("n_customer")),
-        payment.agg(F.count(F.lit(1)).alias("n_payment")),
-        spine.agg(F.count(F.lit(1)).alias("n_date")),
-        fact.agg(F.count(F.lit(1)).alias("n_fact")),
+        f.agg(F.count(F.lit(1)).alias(f"n_{spec.name}"))
+        for spec, f in zip(DIMS, frames)
     ]
+    counts.append(fact.agg(F.count(F.lit(1)).alias("n_fact")))
     return reduce(DataFrame.crossJoin, counts)

@@ -103,6 +103,15 @@ HEADLINE_BUDGET = 1950
 ANCHOR_CANARY_FIRST_SEC = 0.289
 CONTENDED_RATIO = 1.4
 
+
+def contention(canary_first_sec: float) -> tuple[float, bool]:
+    """(canary_ratio, contended) for the headline line. Both come from the
+    ratio as printed (2 dp), so a reader recomputing the flag from the
+    printed ratio always agrees with it."""
+    ratio = round(canary_first_sec / ANCHOR_CANARY_FIRST_SEC, 2)
+    return ratio, ratio >= CONTENDED_RATIO
+
+
 #: NOTE on the 8-vs-32-core scaling probe at sf0.1 (round-11 verdict
 #: #5): every bench seat is sub-3s there and bounded by the per-job
 #: scheduling floor, and shuffle partitions correctly track
@@ -295,6 +304,7 @@ def _run() -> int:
             print(f"  sf1 {name}: {best:.1f}s", flush=True)
 
     canary_last = canary()
+    canary_ratio, contended = contention(canary_first)
     total = round(sum(timings_full.values()), 4)
     payload = {
         "metric": ("sf1_mini_bench_total_sec" if args.sf1
@@ -307,10 +317,8 @@ def _run() -> int:
         "canary_last_sec": canary_last,
         # contention verdict (round-11 verdict #6) — see the
         # ANCHOR_CANARY_FIRST_SEC comment for the anchor's provenance
-        "canary_ratio": round(canary_first / ANCHOR_CANARY_FIRST_SEC, 2),
-        "contended": bool(
-            canary_first / ANCHOR_CANARY_FIRST_SEC >= CONTENDED_RATIO
-        ),
+        "canary_ratio": canary_ratio,
+        "contended": contended,
         # sidecar-only extras (stripped from the headline line):
         "plan_metrics": plan_metrics,
         "plan_totals": {

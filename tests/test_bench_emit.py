@@ -118,6 +118,11 @@ def test_contention_flag_thresholds():
     assert 0.622 / a >= bench.CONTENDED_RATIO          # r11 8-core sitting
     assert 0.289 / a < bench.CONTENDED_RATIO           # r10 anchor
     assert 0.3229 / a < bench.CONTENDED_RATIO          # r12 baseline
+    # the flag follows the ratio as printed (2 dp): 1.396 prints as 1.4,
+    # the threshold itself, so it must read contended
+    assert bench.contention(1.396 * a) == (1.4, True)
+    assert bench.contention(1.394 * a) == (1.39, False)
+    assert bench.contention(0.507) == (1.75, True)   # r11 poisoned
     # and the fields survive the headline line
     line = bench.headline_line(_payload())
     doc = json.loads(line)
