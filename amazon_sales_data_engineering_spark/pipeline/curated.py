@@ -26,9 +26,16 @@ corrected (left) profile; a full outer join cannot broadcast and becomes a
 sort-merge join (SURVEY §4.2), which is exactly why the corrected profile
 exists. The W1 window partitions by order_dt — few fat partitions at load
 time; AQE skew handling applies, salting is the fallback (SURVEY §7.3.6).
+
+``run_curated`` curates the three countries concurrently
+(``parallel.run_concurrently``). Each country's task reads its own source
+table and the forex table and writes only its own curated table, so no two
+concurrent tasks write the same table.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,6 +43,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import rank_dedup, rank_dedup_maxjoin
 from ..sources.sinks import save_table_if_nonempty
 from .config import PROFILES, CountryProfile, curated_table, source_table
+from .parallel import run_concurrently
 
 CURATED_COLUMNS = [
     "sales_order_key",
@@ -161,7 +169,7 @@ def curated_frame(
 def run_curated(
     spark: SparkSession, faithful: bool = True, incremental: bool = False
 ) -> None:
-    """step_4 main(): curate and append all three countries.
+    """step_4 main(): curate and append all three countries, concurrently.
 
     ``incremental=True`` fixes the reference's re-run duplication
     (SURVEY §2.11.8): only source rows above the curated table's
@@ -173,17 +181,26 @@ def run_curated(
     higher key and would sail past the watermark. Designed for the
     corrected profile — the faithful profile's whole-batch rank dedup is
     inherently non-incremental."""
-    for cc in PROFILES:
-        df = curate_sales(spark, cc, faithful)
-        target = curated_table(cc)
-        if incremental and spark.catalog.tableExists(target):
-            existing = spark.table(target)
-            wm = existing.agg(F.max("sales_order_key")).first()[0]
-            if wm is not None:
-                df = df.filter(F.col("sales_order_key") > F.lit(wm))
-            # order-level idempotency: drop orders the curated table
-            # already holds, whatever key the re-delivery was assigned.
-            df = df.join(
-                existing.select("order_id"), "order_id", "left_anti"
-            ).select(*CURATED_COLUMNS)
-        save_table_if_nonempty(df, target)
+    run_concurrently(
+        spark,
+        "curated",
+        {cc: partial(_append_curated, spark, cc, faithful, incremental) for cc in PROFILES},
+    )
+
+
+def _append_curated(
+    spark: SparkSession, cc: str, faithful: bool, incremental: bool
+) -> None:
+    df = curate_sales(spark, cc, faithful)
+    target = curated_table(cc)
+    if incremental and spark.catalog.tableExists(target):
+        existing = spark.table(target)
+        wm = existing.agg(F.max("sales_order_key")).first()[0]
+        if wm is not None:
+            df = df.filter(F.col("sales_order_key") > F.lit(wm))
+        # order-level idempotency: drop orders the curated table
+        # already holds, whatever key the re-delivery was assigned.
+        df = df.join(
+            existing.select("order_id"), "order_id", "left_anti"
+        ).select(*CURATED_COLUMNS)
+    save_table_if_nonempty(df, target)

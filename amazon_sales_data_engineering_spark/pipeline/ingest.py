@@ -8,6 +8,14 @@ equivalent: schema'd read → cast/alias select → append, with COPY's
 per-file idempotency re-implemented via the audit.load_ledger
 (sources.ledger).
 
+``ingest_all`` loads the three countries concurrently
+(``parallel.run_concurrently``): each country's task plans its load and
+appends to its own source table, so no two concurrent tasks write the same
+table. The ledger is the one table the countries share, and two concurrent
+appends to one parquet table are unsafe, so the tasks only return the
+files they loaded; after every source append has committed, the batch
+records all of them in ONE ledger append.
+
 Target schema (FIXTURES.md §2.1, faithful names incl. the DDL typos
 ``order_valaue`` and ``_metadata_row_numer``):
 
@@ -21,7 +29,9 @@ Target schema (FIXTURES.md §2.1, faithful names incl. the DDL typos
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sequences import dense_keys, next_start
@@ -29,6 +39,7 @@ from ..sources.ledger import filter_new_files, record_loaded_files
 from ..sources.readers import read_sales_raw
 from ..sources.sinks import save_table
 from .config import PROFILES, CountryProfile, source_table
+from .parallel import run_concurrently
 
 
 def _source_select(df: DataFrame, profile: CountryProfile) -> DataFrame:
@@ -76,16 +87,20 @@ def plan_ingest(
     return fresh, next_start(spark, target, "sales_order_key")
 
 
-def commit_ingest(
-    spark: SparkSession, fresh: DataFrame, start: int, cc: str
-) -> int:
-    """Phase 2 of a load — shape, key from ``start``, append, record in
-    the ledger. Returns the number of files loaded."""
-    profile = PROFILES[cc]
-    target = source_table(cc)
-    if fresh.isEmpty():
-        return 0
-    shaped = _source_select(fresh, profile)
+def _append_source(fresh: DataFrame, start: int, cc: str) -> list[str]:
+    """Shape ``fresh``, key it from ``start`` and append it to the
+    country's source table. Returns the files it held, sorted (none: no
+    append). The parsed rows are evaluated once: the eager local checkpoint
+    that materializes them also collects their file paths (``observe``),
+    and the append reads the checkpoint."""
+    obs = Observation()
+    fresh = fresh.observe(
+        obs, F.collect_set("_metadata_file_name").alias("files")
+    ).localCheckpoint(eager=True)
+    files = sorted(obs.get["files"])
+    if not files:
+        return files
+    shaped = _source_select(fresh, PROFILES[cc])
     # Sequence surrogate key (§4.3): dense, restart-safe via max+1 offset.
     # Ordered by (file, row-in-file) — a total order over the load batch.
     # At fact scale swap dense_keys for unique_keys (single-partition window
@@ -96,11 +111,18 @@ def commit_ingest(
         order_by=[F.col("_metadata_file_name"), F.col("_metadata_row_numer")],
         start=start,
     ).withColumn("sales_order_key", F.col("sales_order_key").cast("decimal(38,0)"))
-    out = keyed.select("sales_order_key", *shaped.columns)
-    save_table(out, target)  # non-empty: fresh was checked above
-    n_files = fresh.select("_metadata_file_name").distinct().count()
-    record_loaded_files(spark, fresh, target)
-    return n_files
+    save_table(keyed.select("sales_order_key", *shaped.columns), source_table(cc))
+    return files
+
+
+def commit_ingest(
+    spark: SparkSession, fresh: DataFrame, start: int, cc: str
+) -> int:
+    """Phase 2 of a load — shape, key from ``start``, append, then record
+    in the ledger. Returns the number of files loaded."""
+    files = _append_source(fresh, start, cc)
+    record_loaded_files(spark, {source_table(cc): files})
+    return len(files)
 
 
 def ingest_sales(spark: SparkSession, data_root: str, cc: str) -> int:
@@ -111,5 +133,18 @@ def ingest_sales(spark: SparkSession, data_root: str, cc: str) -> int:
     return commit_ingest(spark, fresh, start, cc)
 
 
+def _load_new_files(spark: SparkSession, data_root: str, cc: str) -> list[str]:
+    fresh, start = plan_ingest(spark, data_root, cc)
+    return _append_source(fresh, start, cc)
+
+
 def ingest_all(spark: SparkSession, data_root: str) -> dict[str, int]:
-    return {cc: ingest_sales(spark, data_root, cc) for cc in PROFILES}
+    """Load every country's new files (concurrently), then record them all
+    in one ledger append. Returns the number of files loaded per country."""
+    files = run_concurrently(
+        spark,
+        "ingest",
+        {cc: partial(_load_new_files, spark, data_root, cc) for cc in PROFILES},
+    )
+    record_loaded_files(spark, {source_table(cc): f for cc, f in files.items()})
+    return {cc: len(f) for cc, f in files.items()}

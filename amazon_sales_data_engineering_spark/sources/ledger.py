@@ -11,11 +11,19 @@ duplicate (SURVEY.md §4.3). The ledger is a small catalog table in the
 New-file detection is a broadcast left-anti join on ``_metadata.file_path``
 — the ledger stays tiny relative to the data (one row per file ever
 loaded), so this costs one broadcast regardless of data size. Semantics are
-at-least-once under concurrent writers (no transactional catalog here):
-two writers whose new-file checks both ran before either commit will both
-load. ``reconcile_exactly_once`` is the standing repair — a (file,
-row-number) min-key dedup view that restores exactly-once EFFECT over any
-raced table (race pinned in tests/test_ledger_concurrency.py); a
+at-least-once (no transactional catalog here):
+
+- two writers whose new-file checks both ran before either commit will
+  both load;
+- a batch records its files only after every country's source append has
+  committed, in ONE ledger append for the whole batch
+  (``pipeline.ingest.ingest_all``), so a crash — or another country's
+  failed load — between a country's source append and that ledger append
+  leaves rows whose files the next run loads again.
+
+``reconcile_exactly_once`` is the standing repair for both windows — a
+(file, row-number) min-key dedup view that restores exactly-once EFFECT
+over any such table (race pinned in tests/test_ledger_concurrency.py); a
 Delta/Iceberg-backed catalog is the transactional alternative at 100 TB.
 """
 
@@ -45,17 +53,16 @@ def filter_new_files(
     return df.join(F.broadcast(loaded), [file_col], "left_anti")
 
 
-def record_loaded_files(
-    spark: SparkSession, df: DataFrame, target_table: str, file_col: str = "_metadata_file_name"
-) -> None:
-    """Append the distinct file paths of ``df`` to the ledger."""
-    entry = df.select(
-        F.lit(target_table).alias("target_table"),
-        F.col(file_col).alias("file_path"),
-    ).dropDuplicates(["file_path"]).withColumn(
+def record_loaded_files(spark: SparkSession, files: dict[str, list[str]]) -> None:
+    """Append one ledger row per (target table, file path) in ``files`` —
+    one append for the whole batch, none when there is nothing to record."""
+    rows = [(table, path) for table, paths in files.items() for path in paths]
+    if not rows:
+        return
+    entry = spark.createDataFrame(rows, "target_table string, file_path string")
+    entry.withColumn(
         "loaded_at", F.current_timestamp().cast("timestamp_ntz")
-    )
-    entry.write.mode("append").saveAsTable(LEDGER_TABLE)
+    ).write.mode("append").saveAsTable(LEDGER_TABLE)
 
 
 def reconcile_exactly_once(

@@ -120,9 +120,14 @@ def test_contention_flag_thresholds():
     assert 0.3229 / a < bench.CONTENDED_RATIO          # r12 baseline
     # the flag follows the ratio as printed (2 dp): 1.396 prints as 1.4,
     # the threshold itself, so it must read contended
-    assert bench.contention(1.396 * a) == (1.4, True)
-    assert bench.contention(1.394 * a) == (1.39, False)
-    assert bench.contention(0.507) == (1.75, True)   # r11 poisoned
+    n = bench.ANCHOR_CPUS
+    assert bench.contention(1.396 * a, n) == (1.4, True)
+    assert bench.contention(1.394 * a, n) == (1.39, False)
+    assert bench.contention(0.507, n) == (1.75, True)   # r11 poisoned
+    # the anchor holds only at its own core count: an uncontended sitting
+    # on fewer cores (r11 8-core, 0.622 s) has no verdict, not a false one
+    assert bench.contention(0.622, 8) == (2.15, None)
+    assert bench.contention(0.289, 4) == (1.0, None)
     # and the fields survive the headline line
     line = bench.headline_line(_payload())
     doc = json.loads(line)
