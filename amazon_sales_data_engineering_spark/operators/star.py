@@ -16,15 +16,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, list[str]]],
-    how: str = "inner",
-) -> DataFrame:
-    """Join ``fact`` against each ``(dim, using_cols)`` with broadcast
+def star_join(fact: DataFrame, dims: Sequence[tuple[DataFrame, list[str]]]) -> DataFrame:
+    """Inner-join ``fact`` against each ``(dim, using_cols)`` with broadcast
     hints. USING-style join keeps one copy of the key columns (matching the
     reference's column-list joins)."""
     out = fact
     for dim, keys in dims:
-        out = out.join(F.broadcast(dim), keys, how)
+        out = out.join(F.broadcast(dim), keys, "inner")
     return out

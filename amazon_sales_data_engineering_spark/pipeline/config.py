@@ -1,9 +1,12 @@
 """Pipeline configuration: namespaces, country profiles, semantic profiles.
 
-Country details mirror /root/reference/step_4_source_to_curated.py:81-85
-(table, currency, country, region, forex column) plus the per-country file
-format and header quirks (FIXTURES.md §1): IN csv has ``GST``/``Mobile``
-where US/FR have ``Tax``/``Phone``.
+``CountryProfile`` carries what differs by country past the raw read: the
+raw format the country's files arrive in (a key of
+``sources.readers.FORMATS``, which knows the directory, schema and header
+names), the curated constants of /root/reference/step_4_source_to_curated.py:81-85
+(country, region, currency, forex column) and the source table's contact
+column name (``mobile`` for IN, ``phone`` elsewhere). Raw header quirks are
+not here: every raw frame arrives with the same canonical names.
 
 Two semantic profiles (SURVEY.md §7.1):
 - ``faithful`` (default) replicates the reference's observable quirks:
@@ -20,25 +23,23 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 NAMESPACES = ("source", "curated", "consumption", "common", "audit")
+FOREX_TABLE = "common.exchange_rate"
 
 
 @dataclass(frozen=True)
 class CountryProfile:
-    code: str  # "in" | "us" | "fr"
     fmt: str  # csv | parquet | json
     country: str  # IN | US | FR
     region: str  # APAC | AMER | EU
     currency: str  # INR | USD | EUR
     forex_col: str  # usd2inr | usd2usd | usd2eu
-    tax_field: str  # GST (IN csv) | Tax
-    contact_field: str  # Mobile (IN) | Phone
     contact_col: str  # source-table column name: mobile | phone
 
 
 PROFILES: dict[str, CountryProfile] = {
-    "in": CountryProfile("in", "csv", "IN", "APAC", "INR", "usd2inr", "GST", "Mobile", "mobile"),
-    "us": CountryProfile("us", "parquet", "US", "AMER", "USD", "usd2usd", "Tax", "Phone", "phone"),
-    "fr": CountryProfile("fr", "json", "FR", "EU", "EUR", "usd2eu", "Tax", "Phone", "phone"),
+    "in": CountryProfile("csv", "IN", "APAC", "INR", "usd2inr", "mobile"),
+    "us": CountryProfile("parquet", "US", "AMER", "USD", "usd2usd", "phone"),
+    "fr": CountryProfile("json", "FR", "EU", "EUR", "usd2eu", "phone"),
 }
 
 

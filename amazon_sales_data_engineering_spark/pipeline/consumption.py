@@ -209,7 +209,7 @@ def star(sales: DataFrame, dims: list[DataFrame]) -> DataFrame:
     """``sales`` (null promo codes read 'NA', as in the promo dim) inner-
     joined to ``dims[i]`` on ``DIMS[i].fact_keys``, every dim broadcast."""
     pairs = [(dim, spec.fact_keys) for spec, dim in zip(DIMS, dims, strict=True)]
-    return star_join(_promo_na(sales), pairs, how="inner")
+    return star_join(_promo_na(sales), pairs)
 
 
 _WM_TABLE = "audit.fact_load_watermark"

@@ -42,34 +42,8 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import rank_dedup, rank_dedup_maxjoin
 from ..sources.sinks import save_table_if_nonempty
-from .config import PROFILES, CountryProfile, curated_table, source_table
+from .config import FOREX_TABLE, PROFILES, CountryProfile, curated_table, source_table
 from .parallel import run_concurrently
-
-CURATED_COLUMNS = [
-    "sales_order_key",
-    "order_id",
-    "order_dt",
-    "customer_name",
-    "mobile_key",
-    "country",
-    "region",
-    "order_quantity",
-    "local_currency",
-    "local_unit_price",
-    "promotion_code",
-    "local_total_order_amt",
-    "local_tax_amt",
-    "exhchange_rate",  # sic (7. Source to Curated Layer.sql:41)
-    "us_total_order_amt",
-    "usd_tax_amt",
-    "payment_status",
-    "shipping_status",
-    "payment_method",
-    "payment_provider",
-    "conctact_no",  # sic (7. Source to Curated Layer.sql:48)
-    "shipping_address",
-]
-
 
 def curate_sales(
     spark: SparkSession, cc: str, faithful: bool = True
@@ -78,7 +52,7 @@ def curate_sales(
     catalog's source/common tables."""
     p = PROFILES[cc]
     src = spark.table(source_table(cc))
-    forex = spark.table("common.exchange_rate")
+    forex = spark.table(FOREX_TABLE)
     return curated_frame(src, forex, p, faithful)
 
 
@@ -100,7 +74,11 @@ def curated_frame(
     the operator docstring for the null-parity argument). The window
     form stays the faithful oracle; the maxjoin form is the plan you
     want at 100× data, where one hot load date would otherwise
-    serialize onto a single window task (SURVEY §7.3.6)."""
+    serialize onto a single window task (SURVEY §7.3.6). It exists only
+    for the faithful dedup: ``faithful=False, scale_dedup=True`` raises
+    ``ValueError``."""
+    if scale_dedup and not faithful:
+        raise ValueError("scale_dedup replaces the faithful dedup; pass faithful=True")
     filtered = (
         src.filter(F.col("payment_status") == "Paid")
         .filter(F.col("shipping_status") == "Delivered")
@@ -202,5 +180,5 @@ def _append_curated(
         # already holds, whatever key the re-delivery was assigned.
         df = df.join(
             existing.select("order_id"), "order_id", "left_anti"
-        ).select(*CURATED_COLUMNS)
+        ).select(*df.columns)
     save_table_if_nonempty(df, target)

@@ -56,13 +56,13 @@ def _source_select(df: DataFrame, profile: CountryProfile) -> DataFrame:
         num("Total Price").alias("order_valaue"),  # sic (3. Source Tables.sql:36)
         F.col("Promotion Code").alias("promotion_code"),
         money("Order Amount").alias("final_order_amount"),
-        money(profile.tax_field).alias("tax_amount"),
+        money("Tax").alias("tax_amount"),
         F.col("Order Date").cast("date").alias("order_dt"),
         F.col("Payment Status").alias("payment_status"),
         F.col("Shipping Status").alias("shipping_status"),
         F.col("Payment Method").alias("payment_method"),
         F.col("Payment Provider").alias("payment_provider"),
-        F.col(profile.contact_field).alias(profile.contact_col),
+        F.col("Phone").alias(profile.contact_col),
         F.col("Delivery Address").alias("shipping_address"),
         F.col("_metadata_file_name"),
         F.col("_metadata_row_numer"),

@@ -10,7 +10,7 @@ from pyspark.sql import SparkSession
 
 from ..sources.readers import forex_table
 from ..sources.sinks import save_table
-from .config import ensure_namespaces
+from .config import FOREX_TABLE, ensure_namespaces
 from .consumption import run_consumption
 from .curated import run_curated
 from .ingest import ingest_all
@@ -18,7 +18,7 @@ from .ingest import ingest_all
 
 def load_forex(spark: SparkSession, data_root: str, faithful: bool = True) -> None:
     fx = forex_table(spark, f"{data_root}/exchange-rate-data.csv", faithful)
-    save_table(fx, "common.exchange_rate", mode="overwrite")
+    save_table(fx, FOREX_TABLE, mode="overwrite")
 
 
 def run_pipeline(
@@ -33,8 +33,12 @@ def run_pipeline(
     ``incremental=True`` makes the curated and fact appends high-water-mark
     guarded, so the pipeline can be re-run as new files arrive without
     duplicating earlier rows (the reference re-run duplicates, §2.11.8).
-    Pair with ``faithful=False``; surrogate keys stay dense but their exact
-    values depend on batch boundaries, as with warehouse sequences."""
+    It needs ``faithful=False`` (the faithful whole-batch rank dedup is not
+    incremental): ``faithful=True, incremental=True`` raises ``ValueError``.
+    Surrogate keys stay dense but their exact values depend on batch
+    boundaries, as with warehouse sequences."""
+    if faithful and incremental:
+        raise ValueError("incremental loads need the corrected profile: pass faithful=False")
     ensure_namespaces(spark)
     load_forex(spark, data_root, faithful)
     loaded = ingest_all(spark, data_root)

@@ -4,7 +4,16 @@ The reference stages local files and COPYes them through per-format FILE
 FORMAT objects (/root/reference/Snowflake Worksheets/4. Common Schema.sql:5-23,
 step_2_stage_data.py, step_3_load_from_stage_to_source.py). On Spark the
 "stage" disappears — files are read in place — and FILE FORMATs become
-reader-option presets (SURVEY.md §2.1 S1-S7):
+reader-option presets (SURVEY.md §2.1 S1-S7).
+
+Each shape is written once. ``PAYLOAD`` lists the 16 payload fields in
+file order with their FR json types; ``_csv_schema`` and ``_json_schema``
+are derived from it. ``FORMATS`` gives, per format, the country directory,
+the schema and the reader options, and ``read_sales_raw`` reads any of
+them through ``formats.read_table``. Every format's frame carries the same
+canonical names, ``PAYLOAD``'s: the IN csv's headers ``GST``/``Mobile``
+(``IN_HEADERS``) are renamed to ``Tax``/``Phone`` at read, so nothing
+downstream knows about them.
 
 - CSV (IN): header, quoted fields with EMBEDDED NEWLINES in addresses →
   ``multiLine=True`` is mandatory (FIXTURES.md §1.1). Note multiLine makes
@@ -33,80 +42,74 @@ typo ``_metadata_row_numer`` (/root/reference/Snowflake Worksheets/
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# The 16 logical payload fields, in file order (FIXTURES.md §1.1).
-SALES_FIELDS = [
-    "Order ID",
-    "Customer Name",
-    "Mobile Model",
-    "Quantity",
-    "Price per Unit",
-    "Total Price",
-    "Promotion Code",
-    "Order Amount",
-    "Tax",  # header 'GST' in the IN csv, 'Tax' in US/FR
-    "Order Date",
-    "Payment Status",
-    "Shipping Status",
-    "Payment Method",
-    "Payment Provider",
-    "Contact",  # header 'Mobile' in IN, 'Phone' in US/FR
-    "Delivery Address",
-]
+from .formats import read_table
+
+# The 16 payload fields in file order (FIXTURES.md §1.1), each with the type
+# the FR json is parsed as: numbers arrive mixed there — Price per Unit is a
+# string, Tax a double with float artifacts. The names are the canonical raw
+# column names every format's frame carries.
+PAYLOAD: tuple[tuple[str, T.DataType], ...] = (
+    ("Order ID", T.StringType()),
+    ("Customer Name", T.StringType()),
+    ("Mobile Model", T.StringType()),
+    ("Quantity", T.LongType()),
+    ("Price per Unit", T.StringType()),
+    ("Total Price", T.LongType()),
+    ("Promotion Code", T.StringType()),
+    ("Order Amount", T.DoubleType()),
+    ("Tax", T.DoubleType()),
+    ("Order Date", T.StringType()),
+    ("Payment Status", T.StringType()),
+    ("Shipping Status", T.StringType()),
+    ("Payment Method", T.StringType()),
+    ("Payment Provider", T.StringType()),
+    ("Phone", T.StringType()),
+    ("Delivery Address", T.StringType()),
+)
+
+# payload name → its header in the IN csv
+IN_HEADERS = {"Tax": "GST", "Phone": "Mobile"}
 
 
 def _csv_schema() -> T.StructType:
-    """IN csv: read every field as string (positional $N::text equivalent,
-    /root/reference/step_3_load_from_stage_to_source.py:28-43); numeric
-    casts happen in the load select."""
+    """IN csv: every field as string under its IN header (positional
+    $N::text equivalent, /root/reference/step_3_load_from_stage_to_source.py:28-43);
+    numeric casts happen in the load select."""
     return T.StructType(
-        [
-            T.StructField("Order ID", T.StringType()),
-            T.StructField("Customer Name", T.StringType()),
-            T.StructField("Mobile Model", T.StringType()),
-            T.StructField("Quantity", T.StringType()),
-            T.StructField("Price per Unit", T.StringType()),
-            T.StructField("Total Price", T.StringType()),
-            T.StructField("Promotion Code", T.StringType()),
-            T.StructField("Order Amount", T.StringType()),
-            T.StructField("GST", T.StringType()),
-            T.StructField("Order Date", T.StringType()),
-            T.StructField("Payment Status", T.StringType()),
-            T.StructField("Shipping Status", T.StringType()),
-            T.StructField("Payment Method", T.StringType()),
-            T.StructField("Payment Provider", T.StringType()),
-            T.StructField("Mobile", T.StringType()),
-            T.StructField("Delivery Address", T.StringType()),
-        ]
+        [T.StructField(IN_HEADERS.get(name, name), T.StringType()) for name, _ in PAYLOAD]
     )
 
 
 def _json_schema() -> T.StructType:
-    """FR json (FIXTURES.md §1.3): numbers arrive mixed — Price per Unit is
-    a string, Tax a double with float artifacts."""
-    return T.StructType(
-        [
-            T.StructField("Order ID", T.StringType()),
-            T.StructField("Customer Name", T.StringType()),
-            T.StructField("Mobile Model", T.StringType()),
-            T.StructField("Quantity", T.LongType()),
-            T.StructField("Price per Unit", T.StringType()),
-            T.StructField("Total Price", T.LongType()),
-            T.StructField("Promotion Code", T.StringType()),
-            T.StructField("Order Amount", T.DoubleType()),
-            T.StructField("Tax", T.DoubleType()),
-            T.StructField("Order Date", T.StringType()),
-            T.StructField("Payment Status", T.StringType()),
-            T.StructField("Shipping Status", T.StringType()),
-            T.StructField("Payment Method", T.StringType()),
-            T.StructField("Payment Provider", T.StringType()),
-            T.StructField("Phone", T.StringType()),
-            T.StructField("Delivery Address", T.StringType()),
-        ]
-    )
+    """FR json (FIXTURES.md §1.3): the payload table's types."""
+    return T.StructType([T.StructField(name, dtype) for name, dtype in PAYLOAD])
+
+
+class RawFormat(NamedTuple):
+    """A FILE FORMAT object (4. Common Schema.sql:5-23) as a reader preset."""
+
+    country: str  # files under sales/source=<country>/format=<fmt>/date=*/
+    schema: T.StructType | None  # None: the files' own (parquet)
+    options: dict[str, object]
+    headers: dict[str, str]  # payload name → file header, renamed at read
+
+
+FORMATS: dict[str, RawFormat] = {
+    "csv": RawFormat(
+        "IN",
+        _csv_schema(),
+        {"header": True, "multiLine": True, "quote": '"', "escape": '"', "mode": "PERMISSIVE"},
+        IN_HEADERS,
+    ),
+    "parquet": RawFormat("US", None, {}, {}),
+    "json": RawFormat("FR", _json_schema(), {"multiLine": True, "mode": "PERMISSIVE"}, {}),
+}
 
 
 def with_file_metadata(df: DataFrame) -> DataFrame:
@@ -133,33 +136,14 @@ def with_file_metadata(df: DataFrame) -> DataFrame:
 def read_sales_raw(spark: SparkSession, data_root: str, fmt: str) -> DataFrame:
     """Read one country's raw sales files (Hive-partitioned subtree) in its
     native format, with PERMISSIVE error tolerance (ON_ERROR=CONTINUE
-    parity, SURVEY §2.1 S9). Returns the 16 payload fields plus metadata."""
-    if fmt == "csv":
-        path = f"{data_root}/sales/source=IN/format=csv"
-        df = (
-            spark.read.schema(_csv_schema())
-            .options(
-                header=True,
-                multiLine=True,
-                quote='"',
-                escape='"',
-                mode="PERMISSIVE",
-            )
-            .csv(f"{path}/date=*/*.csv")
-        )
-    elif fmt == "parquet":
-        path = f"{data_root}/sales/source=US/format=parquet"
-        df = spark.read.parquet(f"{path}/date=*/*.parquet")
-    elif fmt == "json":
-        path = f"{data_root}/sales/source=FR/format=json"
-        df = (
-            spark.read.schema(_json_schema())
-            .options(multiLine=True, mode="PERMISSIVE")
-            .json(f"{path}/date=*/*.json")
-        )
-    else:
+    parity, SURVEY §2.1 S9). Returns the 16 payload fields under their
+    canonical names, then the metadata columns."""
+    if fmt not in FORMATS:
         raise ValueError(f"unsupported sales format {fmt!r}")
-    return with_file_metadata(df)
+    f = FORMATS[fmt]
+    path = f"{data_root}/sales/source={f.country}/format={fmt}/date=*/*.{fmt}"
+    df = with_file_metadata(read_table(spark, path, fmt, f.schema, f.options))
+    return df.withColumnsRenamed({header: name for name, header in f.headers.items()})
 
 
 FOREX_COLUMNS = ["date", "usd2usd", "usd2eu", "usd2can", "usd2uk", "usd2inr", "usd2jp"]
@@ -185,18 +169,9 @@ def forex_table(spark: SparkSession, csv_path: str, faithful: bool = True) -> Da
     # loader's TO_DECIMAL(x,12,10) intermediate would overflow for JPY
     # (133.17…) — only the $4 bug makes it fit in the reference; casting
     # straight to the storage type keeps both profiles loadable.
-    dec = lambda c: F.col(c).cast("decimal(10,7)")
+    src = {c: c for c in FOREX_COLUMNS[1:]}
     if faithful:
-        src = {
-            "usd2usd": "usd2usd",
-            "usd2eu": "usd2eu",
-            "usd2can": "usd2can",
-            "usd2uk": "usd2can",
-            "usd2inr": "usd2can",
-            "usd2jp": "usd2can",
-        }
-    else:
-        src = {c: c for c in FOREX_COLUMNS[1:]}
+        src.update(dict.fromkeys(["usd2uk", "usd2inr", "usd2jp"], "usd2can"))
     return raw.select(
-        F.col("date"), *[dec(v).alias(k) for k, v in src.items()]
+        F.col("date"), *[F.col(v).cast("decimal(10,7)").alias(k) for k, v in src.items()]
     )

@@ -5,11 +5,17 @@ plans the engine promises (broadcast star joins, scan pushdown).
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from amazon_sales_data_engineering_spark.sources.readers import read_sales_raw
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+from rawgen import RawTree  # noqa: E402
 
 GOOD_CSV_ROW = (
     '"ORD-{i}","Alice {i}","BrandX/M1/Black/4GB",1,100,100,"PROMO1",100,'
@@ -69,6 +75,23 @@ def test_json_permissive_nulls_bad_fields(spark, raw_root):
     assert bad["Total Price"] == 100
     good = df.filter(F.col("Order ID") == "FR-0").first()
     assert good["Quantity"] == 2
+
+
+@pytest.mark.parametrize("fmt", ["csv", "parquet", "json"])
+def test_every_format_reads_the_canonical_raw_columns(spark, tmp_path, fmt):
+    """Each country's raw frame has the payload table's 16 names in file
+    order, then the 3 metadata columns — the IN csv's GST/Mobile headers
+    included, so nothing downstream depends on the format."""
+    from amazon_sales_data_engineering_spark.sources.readers import PAYLOAD
+
+    RawTree(str(tmp_path), 1, 3, 1).deliver(0)
+    df = read_sales_raw(spark, str(tmp_path), fmt)
+    assert df.columns == [name for name, _ in PAYLOAD] + [
+        "_metadata_file_name",
+        "_metadata_last_modified",
+        "_metadata_row_numer",
+    ]
+    assert df.count() == 3
 
 
 def test_star_join_plan_broadcasts_all_dims(spark):
