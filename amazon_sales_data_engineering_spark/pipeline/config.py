@@ -3,10 +3,11 @@
 ``CountryProfile`` carries what differs by country past the raw read: the
 raw format the country's files arrive in (a key of
 ``sources.readers.FORMATS``, which knows the directory, schema and header
-names), the curated constants of /root/reference/step_4_source_to_curated.py:81-85
-(country, region, currency, forex column) and the source table's contact
-column name (``mobile`` for IN, ``phone`` elsewhere). Raw header quirks are
-not here: every raw frame arrives with the same canonical names.
+names), the curated constants of the reference's
+step_4_source_to_curated.py:81-85 (country, region, currency, forex
+column) and the source table's contact column name (``mobile`` for IN,
+``phone`` elsewhere). Raw header quirks are not here: every raw frame
+arrives with the same canonical names.
 
 Two semantic profiles (SURVEY.md §7.1):
 - ``faithful`` (default) replicates the reference's observable quirks:

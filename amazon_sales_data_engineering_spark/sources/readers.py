@@ -79,7 +79,7 @@ IN_HEADERS = {"Tax": "GST", "Phone": "Mobile"}
 
 def _csv_schema() -> T.StructType:
     """IN csv: every field as string under its IN header (positional
-    $N::text equivalent, /root/reference/step_3_load_from_stage_to_source.py:28-43);
+    $N::text equivalent, reference step_3_load_from_stage_to_source.py:28-43);
     numeric casts happen in the load select."""
     return T.StructType(
         [T.StructField(IN_HEADERS.get(name, name), T.StringType()) for name, _ in PAYLOAD]
