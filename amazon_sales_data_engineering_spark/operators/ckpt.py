@@ -1,4 +1,11 @@
-"""Storage release for localCheckpointed DataFrames.
+"""Local checkpoints: evaluate a plan once, and release its storage.
+
+``observed_checkpoint`` materialises a frame with an eager
+``localCheckpoint`` whose job also computes aggregates over its rows
+(``observe``), so a caller that needs both a count or a max and the rows
+themselves runs the plan once instead of once per action.
+
+Storage release:
 
 ``DataFrame.unpersist()`` routes through the SQL cache manager, which
 tracks only ``persist()``/``cache()`` entries — a localCheckpointed
@@ -21,7 +28,15 @@ all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+
+
+def observed_checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """``df`` materialised by an eager local checkpoint, and the named
+    aggregates ``metrics`` over its rows, computed by the same job."""
+    obs = Observation()
+    rows = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    return rows, obs.get
 
 
 def release_local_checkpoint(df: DataFrame, blocking: bool = False) -> None:

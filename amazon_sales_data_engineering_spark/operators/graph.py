@@ -20,10 +20,10 @@ per round replaces the join+isEmpty probe.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .ckpt import release_local_checkpoint
+from .ckpt import observed_checkpoint, release_local_checkpoint
 
 #: Plan observer for audit tooling (tools/dump_plans.py). localCheckpoint
 #: ERASES lineage — explain() on a returned fixpoint table shows only
@@ -58,9 +58,8 @@ def _ckpt_probe(df: DataFrame, tag: str, probe: Column):
     round is now genuinely one job."""
     if PLAN_OBSERVER is not None:
         PLAN_OBSERVER(tag, df)
-    obs = Observation()
-    out = df.observe(obs, probe.alias("p")).localCheckpoint(eager=True)
-    return out, obs.get["p"]
+    out, seen = observed_checkpoint(df, probe.alias("p"))
+    return out, seen["p"]
 
 
 def cooccurrence_pairs(

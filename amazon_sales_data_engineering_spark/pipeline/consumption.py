@@ -1,7 +1,7 @@
 """Curated → consumption star schema (reference step_5 parity).
 
 Six dimensions + sales_fact
-(/root/reference/step_5_curated_to_consumption.py:51-591; DDL
+(reference step_5_curated_to_consumption.py:51-591; DDL
 8. Consumption Layer.sql:9-123). The schema's shape is written down once,
 in ``DIMS``: an ordered table of ``DimSpec`` entries, one per dimension in
 DDL order (region, product, promo code, customer, payment, date). A spec
@@ -26,6 +26,20 @@ faithful delta key. Everything else is generic over the table:
   dim frames. The reference joins date first; inner equi-joins commute,
   so joining in table order yields the same rows.
 
+Incremental loads (``run_consumption(incremental=True)``) work from the
+batch's delta: the curated rows above the fact watermark
+(``audit.fact_load_watermark``, one max ``sales_order_key`` per country),
+read once. One eager local checkpoint materialises those rows, and its job
+also observes their count and each country's max key. The six dims and
+the fact are built from the checkpoint — a new dim key can only come from
+a curated row this batch appended — and the watermark is overwritten with
+the observed maxima merged into the old marks, so the star's input is
+never evaluated again. An empty delta runs no dim or fact statement. The
+date dim spans min..max of its input and counts days from the min, so its
+input is the delta's dates plus the dates it already holds: the delta
+alone would leave gaps and restart ``day_counter``. The one-shot path
+(``incremental=False``) builds from the whole curated union.
+
 Spark-first deviations, same results:
 
 - the date dim is built distributed (operators.datespine) instead of the
@@ -42,17 +56,19 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from decimal import Decimal
 from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ckpt import observed_checkpoint
 from ..operators.datespine import date_spine
 from ..operators.delta import new_rows
 from ..operators.sequences import dense_keys, next_start, unique_keys
 from ..operators.setops import union_all, union_distinct
 from ..operators.star import star_join
-from ..sources.sinks import save_table_if_nonempty
+from ..sources.sinks import save_table, save_table_if_nonempty
 from .config import PROFILES, curated_table
 from .parallel import run_concurrently
 
@@ -69,6 +85,9 @@ class DimSpec:
     natural_key: list[str]  # delta-load key and surrogate-key order
     fact_keys: list[str]  # USING columns of the fact's join to this dim
     faithful_delta_key: list[str] | None = None
+    # the frame spans min..max of the natural key (the date dim), so a
+    # delta load feeds it the keys the dim holds as well as the new rows
+    spans: bool = False
 
     def delta_key(self, faithful: bool) -> list[str]:
         if faithful and self.faithful_delta_key:
@@ -166,7 +185,7 @@ DIMS: tuple[DimSpec, ...] = (
     ),
     DimSpec(
         "date", "consumption.date_dim", "date_id_pk", _date_frame,
-        ["order_dt"], ["order_dt"],
+        ["order_dt"], ["order_dt"], spans=True,
     ),
 )
 
@@ -182,12 +201,20 @@ def load_dim(
     spark: SparkSession, spec: DimSpec, sales: DataFrame, faithful: bool = True
 ) -> None:
     """Append the rows of ``spec.frame(sales)`` whose delta key the dim
-    does not hold yet, keyed densely from max(pk) + 1."""
-    rows = spec.frame(sales)
-    cols = rows.columns
+    does not hold yet, keyed densely from max(pk) + 1. A spanning frame
+    (the date dim) reads the natural keys the dim holds besides ``sales``,
+    so its bounds and day counter stay those of every row loaded so far
+    when ``sales`` is one batch's delta."""
     key = spec.delta_key(faithful)
-    if spark.catalog.tableExists(spec.table):
-        rows = new_rows(rows, spark.table(spec.table).select(*key), key)
+    if not spark.catalog.tableExists(spec.table):
+        rows = spec.frame(sales)
+    else:
+        stored = spark.table(spec.table)
+        if spec.spans:
+            nk = spec.natural_key
+            sales = sales.select(*nk).unionByName(stored.select(*nk))
+        rows = new_rows(spec.frame(sales), stored.select(*key), key)
+    cols = rows.columns
     keyed = dense_keys(
         rows, spec.pk, spec.natural_key, start=next_start(spark, spec.table, spec.pk)
     )
@@ -213,43 +240,72 @@ def star(sales: DataFrame, dims: list[DataFrame]) -> DataFrame:
 
 
 _WM_TABLE = "audit.fact_load_watermark"
+_WM_SCHEMA = "country string, max_key decimal(38,0)"
+
+
+def _read_watermark(spark) -> dict[str, Decimal] | None:
+    """The recorded (country → max sales_order_key) marks; None before
+    the first incremental fact load. Uses the reference's
+    declared-but-unused ``audit`` schema (SURVEY §2.10 D3)."""
+    if not spark.catalog.tableExists(_WM_TABLE):
+        return None
+    return {r.country: r.max_key for r in spark.table(_WM_TABLE).collect()}
+
+
+def _above(sales: DataFrame, marks: dict[str, Decimal] | None) -> DataFrame:
+    """Curated rows above their country's mark (every row of a country
+    without one)."""
+    if not marks:
+        return sales
+    country, key = F.col("country"), F.col("sales_order_key")
+    mark = F.coalesce(*[F.when(country == c, F.lit(m)) for c, m in marks.items()])
+    return sales.filter(mark.isNull() | (key > mark))
+
+
+def _write_watermark(
+    spark, marks: dict[str, Decimal] | None, batch: dict[str, Decimal]
+) -> None:
+    """Overwrite the watermark with ``marks`` raised to ``batch``'s maxima."""
+    merged = dict(marks or {})
+    for country, key in batch.items():
+        merged[country] = max(merged.get(country, key), key)
+    rows = spark.createDataFrame(list(merged.items()), _WM_SCHEMA)
+    save_table(rows, _WM_TABLE, mode="overwrite")
 
 
 def _apply_fact_watermark(spark, sales: DataFrame) -> DataFrame:
     """Incremental fact loads: keep only curated rows above each country's
-    recorded (country, max sales_order_key) watermark. Uses the reference's
-    declared-but-unused ``audit`` schema (SURVEY §2.10 D3)."""
-    if not spark.catalog.tableExists(_WM_TABLE):
-        return sales
-    wm = spark.table(_WM_TABLE)
-    return (
-        sales.join(F.broadcast(wm), "country", "left")
-        .filter(
-            F.col("max_key").isNull()
-            | (F.col("sales_order_key") > F.col("max_key"))
-        )
-        .drop("max_key")
-    )
+    recorded (country, max sales_order_key) watermark. Only the traced
+    batches of perfbench/elt.py call this; ``run_consumption`` reads the
+    watermark once and filters in ``_batch_delta``."""
+    return _above(sales, _read_watermark(spark))
 
 
 def _record_fact_watermark(spark, processed: DataFrame) -> None:
-    batch = processed.groupBy("country").agg(
-        F.max("sales_order_key").alias("max_key")
+    """Raise the watermark to ``processed``'s max key per country, which
+    evaluates ``processed`` again. Only the traced batches of
+    perfbench/elt.py call this; ``run_consumption`` raises it from the
+    maxima its delta checkpoint observed."""
+    batch = processed.groupBy("country").agg(F.max("sales_order_key")).collect()
+    _write_watermark(spark, _read_watermark(spark), {c: m for c, m in batch})
+
+
+def _batch_delta(
+    sales: DataFrame, marks: dict[str, Decimal] | None
+) -> tuple[DataFrame, int, dict[str, Decimal]]:
+    """The rows of ``sales`` above ``marks``, materialised once: an eager
+    local checkpoint whose job also observes the row count and each
+    country's max key. Returns (rows, row count, {country: max key})."""
+    key, country = F.col("sales_order_key"), F.col("country")
+    maxima = [
+        F.max(F.when(country == p.country, key)).alias(p.country)
+        for p in PROFILES.values()
+    ]
+    rows, seen = observed_checkpoint(
+        _above(sales, marks), F.count(F.lit(1)).alias("rows"), *maxima
     )
-    if spark.catalog.tableExists(_WM_TABLE):
-        merged = (
-            spark.table(_WM_TABLE)
-            .unionByName(batch)
-            .groupBy("country")
-            .agg(F.max("max_key").alias("max_key"))
-        )
-    else:
-        merged = batch
-    # materialize before overwriting the table the plan reads from
-    rows = merged.collect()
-    spark.createDataFrame(rows, merged.schema).write.mode("overwrite").saveAsTable(
-        _WM_TABLE
-    )
+    n = seen.pop("rows")
+    return rows, n, {c: m for c, m in seen.items() if m is not None}
 
 
 _FACT = "consumption.sales_fact"
@@ -294,15 +350,21 @@ def build_fact(spark, sales: DataFrame, dense_fact_keys: bool = True) -> None:
 def run_consumption(
     spark: SparkSession, faithful: bool = True, incremental: bool = False
 ) -> None:
-    """step_5 main(): dims then fact. Dims are always incremental (delta
-    loads); ``incremental=True`` additionally guards the fact append with
-    the audit watermark so re-processing curated rows can't duplicate
-    fact rows."""
+    """step_5 main(): dims then fact. Dims are always delta loads.
+    ``incremental=True`` builds the dims and the fact from the curated rows
+    above the audit watermark only, materialised once, and then raises the
+    watermark to their maxima, so re-processing curated rows can't
+    duplicate fact rows. A batch with no such rows writes no dim or fact
+    row (the first one still creates the empty watermark table)."""
     sales = all_sales(spark, faithful)
-    build_dims(spark, sales, faithful)
-    if incremental:
-        fresh = _apply_fact_watermark(spark, sales)
-        build_fact(spark, fresh)
-        _record_fact_watermark(spark, fresh)
-    else:
+    if not incremental:
+        build_dims(spark, sales, faithful)
         build_fact(spark, sales)
+        return
+    marks = _read_watermark(spark)
+    delta, n, batch = _batch_delta(sales, marks)
+    if n:
+        build_dims(spark, delta, faithful)
+        build_fact(spark, delta)
+    if n or marks is None:
+        _write_watermark(spark, marks, batch)

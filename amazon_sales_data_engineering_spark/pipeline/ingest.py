@@ -31,9 +31,10 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ckpt import observed_checkpoint
 from ..operators.sequences import dense_keys, next_start
 from ..sources.ledger import filter_new_files, record_loaded_files
 from ..sources.readers import read_sales_raw
@@ -93,11 +94,10 @@ def _append_source(fresh: DataFrame, start: int, cc: str) -> list[str]:
     append). The parsed rows are evaluated once: the eager local checkpoint
     that materializes them also collects their file paths (``observe``),
     and the append reads the checkpoint."""
-    obs = Observation()
-    fresh = fresh.observe(
-        obs, F.collect_set("_metadata_file_name").alias("files")
-    ).localCheckpoint(eager=True)
-    files = sorted(obs.get["files"])
+    fresh, seen = observed_checkpoint(
+        fresh, F.collect_set("_metadata_file_name").alias("files")
+    )
+    files = sorted(seen["files"])
     if not files:
         return files
     shaped = _source_select(fresh, PROFILES[cc])

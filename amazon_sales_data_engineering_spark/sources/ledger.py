@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sinks import save_table
+
 LEDGER_TABLE = "audit.load_ledger"
 # a source row's file and its row number in that file (sources.readers)
 FILE_COL, ROW_COL = "_metadata_file_name", "_metadata_row_numer"
@@ -60,9 +62,8 @@ def record_loaded_files(spark: SparkSession, files: dict[str, list[str]]) -> Non
     if not rows:
         return
     entry = spark.createDataFrame(rows, "target_table string, file_path string")
-    entry.withColumn(
-        "loaded_at", F.current_timestamp().cast("timestamp_ntz")
-    ).write.mode("append").saveAsTable(LEDGER_TABLE)
+    stamp = F.current_timestamp().cast("timestamp_ntz")
+    save_table(entry.withColumn("loaded_at", stamp), LEDGER_TABLE)
 
 
 def reconcile_exactly_once(spark: SparkSession, target_table: str) -> DataFrame:
