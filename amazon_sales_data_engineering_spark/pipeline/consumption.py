@@ -59,6 +59,7 @@ from dataclasses import dataclass
 from decimal import Decimal
 from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -68,7 +69,7 @@ from ..operators.delta import new_rows
 from ..operators.sequences import dense_keys, next_start, unique_keys
 from ..operators.setops import union_all, union_distinct
 from ..operators.star import star_join
-from ..sources.sinks import save_table, save_table_if_nonempty
+from ..sources.sinks import local_rows, save_table, save_table_if_nonempty
 from .config import PROFILES, curated_table
 from .parallel import run_concurrently
 
@@ -240,7 +241,7 @@ def star(sales: DataFrame, dims: list[DataFrame]) -> DataFrame:
 
 
 _WM_TABLE = "audit.fact_load_watermark"
-_WM_SCHEMA = "country string, max_key decimal(38,0)"
+_WM_SCHEMA = pa.schema([("country", pa.string()), ("max_key", pa.decimal128(38, 0))])
 
 
 def _read_watermark(spark) -> dict[str, Decimal] | None:
@@ -269,8 +270,7 @@ def _write_watermark(
     merged = dict(marks or {})
     for country, key in batch.items():
         merged[country] = max(merged.get(country, key), key)
-    rows = spark.createDataFrame(list(merged.items()), _WM_SCHEMA)
-    save_table(rows, _WM_TABLE, mode="overwrite")
+    save_table(local_rows(spark, list(merged.items()), _WM_SCHEMA), _WM_TABLE, mode="overwrite")
 
 
 def _apply_fact_watermark(spark, sales: DataFrame) -> DataFrame:

@@ -24,12 +24,13 @@ SPLITTABLE_COLUMNAR = ("parquet", "orc")
 
 def read_table(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     fmt: str = "parquet",
     schema: StructType | str | None = None,
     options: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Read ``path`` as ``fmt`` with the engine's per-format presets.
+    """Read ``path`` (one path or glob, or a list of them) as ``fmt`` with
+    the engine's per-format presets.
 
     Presets: CSV → header+PERMISSIVE, JSON → PERMISSIVE, text → one row
     per line in column ``value``. Pass ``options`` to override (e.g.

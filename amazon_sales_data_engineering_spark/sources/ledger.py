@@ -8,10 +8,19 @@ duplicate (SURVEY.md §4.3). The ledger is a small catalog table in the
 
     audit.load_ledger(target_table string, file_path string, loaded_at ts)
 
-New-file detection is a broadcast left-anti join on ``_metadata.file_path``
-— the ledger stays tiny relative to the data (one row per file ever
-loaded), so this costs one broadcast regardless of data size. Semantics are
-at-least-once (no transactional catalog here):
+New files are detected from paths, before any file is parsed, as COPY
+uses its load metadata: ingest lists the candidate files on the driver
+(``sources.readers.list_sales_files``), reads the ledger once per batch
+(``loaded_files``), and parses only the listed paths the ledger does not
+hold. A path has two forms. The ledger records the form
+``_metadata.file_path`` holds, ``Path.toUri().toString()``: ``file:/…``,
+percent-encoded. The reader is given ``Path.toString()``, unencoded, and
+expands any glob metacharacter in it, so a file whose name holds one is
+read as a pattern. ``DataFrame.inputFiles()`` gives a third form
+(``file:///…``), compared with neither. A file is recorded once it is
+loaded, with rows or without: a file with no rows is loaded, as COPY marks
+a 0-row file LOADED. Semantics are at-least-once (no transactional catalog
+here):
 
 - two writers whose new-file checks both ran before either commit will
   both load;
@@ -29,30 +38,28 @@ Delta/Iceberg-backed catalog is the transactional alternative at 100 TB.
 
 from __future__ import annotations
 
+from collections import defaultdict
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks import save_table
+from .sinks import local_rows, save_table
 
 LEDGER_TABLE = "audit.load_ledger"
 # a source row's file and its row number in that file (sources.readers)
 FILE_COL, ROW_COL = "_metadata_file_name", "_metadata_row_numer"
+_ENTRY = pa.schema([("target_table", pa.string()), ("file_path", pa.string())])
 
 
-def _ledger_exists(spark: SparkSession) -> bool:
-    return spark.catalog.tableExists(LEDGER_TABLE)
-
-
-def filter_new_files(spark: SparkSession, df: DataFrame, target_table: str) -> DataFrame:
-    """Drop rows whose source file was already loaded into ``target_table``."""
-    if not _ledger_exists(spark):
-        return df
-    loaded = (
-        spark.table(LEDGER_TABLE)
-        .filter(F.col("target_table") == target_table)
-        .select(F.col("file_path").alias(FILE_COL))
-    )
-    return df.join(F.broadcast(loaded), [FILE_COL], "left_anti")
+def loaded_files(spark: SparkSession) -> defaultdict[str, set[str]]:
+    """The recorded file paths per target table, from one read of the
+    ledger (no read, and none recorded, before the ledger exists)."""
+    loaded: defaultdict[str, set[str]] = defaultdict(set)
+    if spark.catalog.tableExists(LEDGER_TABLE):
+        for row in spark.table(LEDGER_TABLE).select(*_ENTRY.names).collect():
+            loaded[row.target_table].add(row.file_path)
+    return loaded
 
 
 def record_loaded_files(spark: SparkSession, files: dict[str, list[str]]) -> None:
@@ -61,9 +68,8 @@ def record_loaded_files(spark: SparkSession, files: dict[str, list[str]]) -> Non
     rows = [(table, path) for table, paths in files.items() for path in paths]
     if not rows:
         return
-    entry = spark.createDataFrame(rows, "target_table string, file_path string")
     stamp = F.current_timestamp().cast("timestamp_ntz")
-    save_table(entry.withColumn("loaded_at", stamp), LEDGER_TABLE)
+    save_table(local_rows(spark, rows, _ENTRY).withColumn("loaded_at", stamp), LEDGER_TABLE)
 
 
 def reconcile_exactly_once(spark: SparkSession, target_table: str) -> DataFrame:

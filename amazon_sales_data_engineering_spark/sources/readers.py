@@ -9,11 +9,18 @@ reader-option presets (SURVEY.md §2.1 S1-S7).
 Each shape is written once. ``PAYLOAD`` lists the 16 payload fields in
 file order with their FR json types; ``_csv_schema`` and ``_json_schema``
 are derived from it. ``FORMATS`` gives, per format, the country directory,
-the schema and the reader options, and ``read_sales_raw`` reads any of
-them through ``formats.read_table``. Every format's frame carries the same
-canonical names, ``PAYLOAD``'s: the IN csv's headers ``GST``/``Mobile``
+the schema and the reader options. ``sales_glob`` is the one glob a
+country's files match, and ``read_sales_files`` reads any of them through
+``formats.read_table``. Every format's frame carries the same canonical
+names, ``PAYLOAD``'s: the IN csv's headers ``GST``/``Mobile``
 (``IN_HEADERS``) are renamed to ``Tax``/``Phone`` at read, so nothing
 downstream knows about them.
+
+Ingest detects new files from listed paths, not by parsing every file and
+anti-joining its rows against the ledger: ``list_sales_files`` lists the
+glob on the driver and gives each file in two forms, the one the ledger
+records and compares (``_metadata.file_path``'s, percent-encoded) and the
+one the reader takes (unencoded).
 
 - CSV (IN): header, quoted fields with EMBEDDED NEWLINES in addresses →
   ``multiLine=True`` is mandatory (FIXTURES.md §1.1). Note multiLine makes
@@ -133,17 +140,50 @@ def with_file_metadata(df: DataFrame) -> DataFrame:
     )
 
 
-def read_sales_raw(spark: SparkSession, data_root: str, fmt: str) -> DataFrame:
-    """Read one country's raw sales files (Hive-partitioned subtree) in its
-    native format, with PERMISSIVE error tolerance (ON_ERROR=CONTINUE
-    parity, SURVEY §2.1 S9). Returns the 16 payload fields under their
-    canonical names, then the metadata columns."""
+def sales_glob(data_root: str, fmt: str) -> str:
+    """The glob that one country's raw sales files match."""
     if fmt not in FORMATS:
         raise ValueError(f"unsupported sales format {fmt!r}")
+    return f"{data_root}/sales/source={FORMATS[fmt].country}/format={fmt}/date=*/*.{fmt}"
+
+
+def list_sales_files(spark: SparkSession, data_root: str, fmt: str) -> dict[str, str]:
+    """The files ``sales_glob`` matches, listed on the driver through the
+    session's Hadoop ``FileSystem.globStatus``: no Spark job. Names the
+    reader skips (its hidden-file rule: ``_x``, ``.x``) are left out.
+
+    Maps each file's recorded form to its reader form. The recorded form
+    is ``Path.toUri().toString()``, exactly ``_metadata.file_path``:
+    ``file:/…``, percent-encoded (a space is ``%20``). The reader form is
+    ``Path.toString()``, unencoded: the reader encodes the path it is
+    given, so the recorded form would be encoded twice. The two differ
+    only where a path holds a character that URIs encode."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(sales_glob(data_root, fmt))
+    fs = pattern.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    hidden = spark._jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName
+    listed = {}
+    for status in fs.globStatus(pattern) or []:
+        path = status.getPath()
+        if status.isFile() and not hidden(path.getName()):
+            listed[path.toUri().toString()] = path.toString()
+    return listed
+
+
+def read_sales_files(spark: SparkSession, files: str | list[str], fmt: str) -> DataFrame:
+    """Parse raw sales files of format ``fmt`` (paths or a glob, in reader
+    form) with PERMISSIVE error tolerance (ON_ERROR=CONTINUE parity,
+    SURVEY §2.1 S9). Returns the 16 payload fields under their canonical
+    names, then the metadata columns. The reader expands glob
+    metacharacters (``*?[]{}``) in any path it is given, so a file whose
+    name holds one is read as a pattern."""
     f = FORMATS[fmt]
-    path = f"{data_root}/sales/source={f.country}/format={fmt}/date=*/*.{fmt}"
-    df = with_file_metadata(read_table(spark, path, fmt, f.schema, f.options))
+    df = with_file_metadata(read_table(spark, files, fmt, f.schema, f.options))
     return df.withColumnsRenamed({header: name for name, header in f.headers.items()})
+
+
+def read_sales_raw(spark: SparkSession, data_root: str, fmt: str) -> DataFrame:
+    """Read every raw sales file of one country (``sales_glob``)."""
+    return read_sales_files(spark, sales_glob(data_root, fmt), fmt)
 
 
 FOREX_COLUMNS = ["date", "usd2usd", "usd2eu", "usd2can", "usd2uk", "usd2inr", "usd2jp"]

@@ -12,11 +12,16 @@ for the count (an accidental extra action, SURVEY §2.1 S19) and once for
 the write. Here the input is evaluated once: an eager local checkpoint
 whose job also counts the rows (``observe``), and the append reads the
 checkpoint.
+
+Bookkeeping rows built on the driver (the load ledger, the fact
+watermark) are written from ``local_rows``: one partition of a JVM-local
+relation, so the write is one task that writes one file.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.ckpt import observed_checkpoint
@@ -31,6 +36,17 @@ def save_table(df: DataFrame, name: str, mode: str = "append") -> None:
         return
     cols = spark.table(name).columns
     df.select(*cols).write.insertInto(name, overwrite=mode == "overwrite")
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:
+    """``rows`` as a one-partition ``LocalTableScan``. ``createDataFrame``
+    plans a pyarrow Table as a JVM-local relation; a Python list (and an
+    empty pandas frame, silently) plans as ``Scan ExistingRDD`` over a
+    Python RDD, whose write starts Python workers for one task per core
+    and writes a file per task. A local relation also splits into up to
+    one partition per core, hence the ``coalesce(1)``."""
+    table = pa.Table.from_pylist([dict(zip(schema.names, row)) for row in rows], schema)
+    return spark.createDataFrame(table).coalesce(1)
 
 
 def save_table_if_nonempty(df: DataFrame, name: str) -> bool:

@@ -40,12 +40,9 @@ def test_raced_ingest_is_at_least_once_and_reconciles(spark):
     spark.sql(f"DROP TABLE IF EXISTS {target}")
     spark.sql(f"DROP TABLE IF EXISTS {LEDGER_TABLE}")
 
-    # Both writers run their read-check BEFORE either commit: each sees
-    # every file as fresh and the same key high-water mark. (With no
-    # ledger table yet, filter_new_files passes rows through eagerly —
-    # the first-load race; for later batches the check is a lazy
-    # anti-join that can self-heal at action time, but nothing orders
-    # the two commits, so the class is the same.)
+    # Both writers run their read-check BEFORE either commit: each lists
+    # every file as absent from the ledger and sees the same key
+    # high-water mark. Nothing orders the two commits.
     fresh_a, start_a = plan_ingest(spark, DATA, CC)
     fresh_b, start_b = plan_ingest(spark, DATA, CC)
     assert start_a == start_b == 1

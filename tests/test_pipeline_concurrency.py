@@ -12,7 +12,9 @@ shipped, once with ``run_concurrently`` replaced by a plain sequential map
 - the ledger to hold each delivered file exactly once, under its
   country's source table;
 - each batch to load exactly the files delivered for it, and a poll with
-  nothing new to load none;
+  nothing new to load none and start no job in any ``ingest.<cc>`` group;
+- each batch to add exactly one data file to the ledger, and the fact
+  watermark to hold one data file after each overwrite;
 - every concurrent task's Spark jobs to carry its ``<layer>.<name>`` job
   group.
 
@@ -64,6 +66,10 @@ def _catalog(spark) -> dict[str, Counter]:
     return out
 
 
+def _data_files(spark, table: str) -> int:
+    return len(spark.table(table).inputFiles())
+
+
 def _run_batches(spark, root: str) -> dict[str, Counter]:
     """Batch 0 delivers date 0; batch 1 delivers date 1 and re-delivers
     date 0; then a poll. Returns the catalog."""
@@ -74,9 +80,16 @@ def _run_batches(spark, root: str) -> dict[str, Counter]:
         new = tree.deliver(i) + (tree.redeliver(0) if i else [])
         loaded = run_pipeline(spark, tree.root, faithful=False, incremental=True)
         assert loaded == {cc: sum(f.cc == cc for f in new) for cc in config.PROFILES}
+        assert _data_files(spark, LEDGER_TABLE) == i + 1  # one file per batch
+        assert _data_files(spark, consumption._WM_TABLE) == 1
+
+    tracker = spark.sparkContext.statusTracker()
+    groups = [f"ingest.{cc}" for cc in config.PROFILES]
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
     assert run_pipeline(spark, tree.root, faithful=False, incremental=True) == dict.fromkeys(
         config.PROFILES, 0
     )
+    assert all(set(tracker.getJobIdsForGroup(g)) <= before[g] for g in groups)
 
     ledger = spark.table(LEDGER_TABLE).collect()
     recorded = Counter((r.target_table, r.file_path.removeprefix("file:")) for r in ledger)

@@ -8,14 +8,21 @@ each call, so after the write the file must hold one line per row. (An
 accumulator cannot count these calls: a task cut short by a limit, as in
 ``isEmpty()``, drops its accumulator updates.) A frame with no rows must
 create no table.
+
+``sources.sinks.local_rows`` must plan driver-built rows as one partition
+of a JVM-local relation, with rows and without.
 """
 
 from __future__ import annotations
 
+from decimal import Decimal
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from amazon_sales_data_engineering_spark.sources.sinks import (
+    local_rows,
     save_table,
     save_table_if_nonempty,
 )
@@ -64,3 +71,18 @@ def test_save_table_into_an_existing_table_matches_columns_by_name(clean):
 
     save_table(spark.createDataFrame([("c", 3)], "v string, k int"), name, mode="overwrite")
     assert [tuple(r) for r in spark.table(name).collect()] == [(3, "c")]
+
+
+@pytest.mark.parametrize("n", [0, 9])
+def test_local_rows_plan_one_partition_of_a_local_relation(spark, n):
+    """No Python RDD (its write starts Python workers and writes a file per
+    core), even for no rows, where ``createDataFrame`` of a pandas frame
+    falls back to one without a word."""
+    schema = pa.schema([("k", pa.string()), ("v", pa.decimal128(38, 0))])
+    rows = [(f"k{i}", Decimal(i)) for i in range(n)]
+    df = local_rows(spark, rows, schema)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.rdd.getNumPartitions() == 1
+    assert df.schema.simpleString() == "struct<k:string,v:decimal(38,0)>"
+    assert sorted(map(tuple, df.collect())) == rows
