@@ -21,25 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-HEX_DIGITS = "0123456789abcdef"
-
-
-def md5_hex(*cols: Column | str) -> Column:
-    """md5 of the '|'-joined string forms of ``cols`` (lowercase hex)."""
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.md5(F.concat_ws("|", *[p.cast("string") for p in parts]))
-
 
 def seeded_md5(seed: int, col: Column | str) -> Column:
     """Family of independent hash functions indexed by integer seed."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.concat_ws("|", F.lit(str(seed)), c.cast("string")))
-
-
-def hex_char_value(ch: Column) -> Column:
-    """Value 0..15 of a single lowercase hex character. Spark: conv(ch,16,10);
-    DuckDB oracle twin: ``instr('0123456789abcdef', ch) - 1``."""
-    return F.conv(ch, 16, 10).cast("int")
 
 
 def decimal_sum(col: Column | str, scale: int = 6, alias: str | None = None) -> Column:

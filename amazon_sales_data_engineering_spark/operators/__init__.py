@@ -1,3 +1,3 @@
 """Reusable distributed operators (the engine's algorithm library)."""
 
-from . import datespine, dedup, delta, sequences, setops, similarity, star  # noqa: F401
+from . import datespine, dedup, delta, sequences, setops, similarity  # noqa: F401

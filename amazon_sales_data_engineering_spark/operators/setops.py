@@ -4,8 +4,8 @@ Snowpark ``DataFrame.union`` is SQL UNION — **deduplicating** — while Spark
 ``union`` is UNION ALL (SURVEY.md §2.7 U1; the reference unions the three
 country curated tables at
 /root/reference/step_5_curated_to_consumption.py:469). ``union_distinct``
-preserves the reference semantics; ``union_all`` is the corrected/fast
-profile (safe when rows carry unique surrogate keys).
+preserves the reference semantics; the corrected profile's UNION ALL is
+plain ``DataFrame.union`` (safe when rows carry unique surrogate keys).
 """
 
 from __future__ import annotations
@@ -21,7 +21,3 @@ def union_distinct(*dfs: DataFrame) -> DataFrame:
     """
     return reduce(DataFrame.union, dfs).distinct()
 
-
-def union_all(*dfs: DataFrame) -> DataFrame:
-    """Positional UNION ALL — no shuffle at all."""
-    return reduce(DataFrame.union, dfs)

@@ -20,25 +20,29 @@ faithful delta key. Everything else is generic over the table:
   dims run in. The fact and its watermark run after the dims, one after
   the other.
 - ``star`` joins sales rows to one frame per spec on its fact keys, a
-  chain of BROADCAST inner joins (J6): dims are orders of magnitude
+  chain of BROADCAST inner joins (J6; reference
+  step_5_curated_to_consumption.py:547-566): dims are orders of magnitude
   smaller than the fact, so the fact never shuffles. ``build_fact`` feeds
   it the stored dims, plans.pipeline_ops.pipeline_star_counts the lazy
   dim frames. The reference joins date first; inner equi-joins commute,
   so joining in table order yields the same rows.
 
-Incremental loads (``run_consumption(incremental=True)``) work from the
-batch's delta: the curated rows above the fact watermark
-(``audit.fact_load_watermark``, one max ``sales_order_key`` per country),
-read once. One eager local checkpoint materialises those rows, and its job
-also observes their count and each country's max key. The six dims and
-the fact are built from the checkpoint — a new dim key can only come from
-a curated row this batch appended — and the watermark is overwritten with
-the observed maxima merged into the old marks, so the star's input is
-never evaluated again. An empty delta runs no dim or fact statement. The
-date dim spans min..max of its input and counts days from the min, so its
-input is the delta's dates plus the dates it already holds: the delta
-alone would leave gaps and restart ``day_counter``. The one-shot path
-(``incremental=False``) builds from the whole curated union.
+Every run builds the star from one input, read once: one eager local
+checkpoint of the curated union (``all_sales``), whose job also observes
+its row count and each country's max ``sales_order_key``. The six dims and
+the fact are built from the checkpoint, so the union is never evaluated
+again, and a run with no rows runs no dim or fact statement.
+
+- A one-shot load (``run_consumption(incremental=False)``) checkpoints
+  every curated row and records no watermark.
+- An incremental load checkpoints the batch's delta: the curated rows
+  above the fact watermark (``audit.fact_load_watermark``, one max
+  ``sales_order_key`` per country). A new dim key can only come from a
+  curated row this batch appended. The watermark is then overwritten with
+  the observed maxima merged into the old marks. The date dim spans
+  min..max of its input and counts days from the min, so its input is the
+  delta's dates plus the dates it already holds: the delta alone would
+  leave gaps and restart ``day_counter``.
 
 Spark-first deviations, same results:
 
@@ -57,7 +61,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 from decimal import Decimal
-from functools import partial
+from functools import partial, reduce
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -67,8 +71,7 @@ from ..operators.ckpt import observed_checkpoint
 from ..operators.datespine import date_spine
 from ..operators.delta import new_rows
 from ..operators.sequences import dense_keys, next_start, unique_keys
-from ..operators.setops import union_all, union_distinct
-from ..operators.star import star_join
+from ..operators.setops import union_distinct
 from ..sources.sinks import local_rows, save_table, save_table_if_nonempty
 from .config import PROFILES, curated_table
 from .parallel import run_concurrently
@@ -195,7 +198,7 @@ def all_sales(spark: SparkSession, faithful: bool = True) -> DataFrame:
     """UNION of the three curated tables — deduplicating in faithful mode
     (Snowpark union semantics, U1) else UNION ALL."""
     dfs = [spark.table(curated_table(cc)) for cc in PROFILES]
-    return union_distinct(*dfs) if faithful else union_all(*dfs)
+    return union_distinct(*dfs) if faithful else reduce(DataFrame.union, dfs)
 
 
 def load_dim(
@@ -235,9 +238,12 @@ def build_dims(spark, sales: DataFrame, faithful: bool = True) -> None:
 
 def star(sales: DataFrame, dims: list[DataFrame]) -> DataFrame:
     """``sales`` (null promo codes read 'NA', as in the promo dim) inner-
-    joined to ``dims[i]`` on ``DIMS[i].fact_keys``, every dim broadcast."""
-    pairs = [(dim, spec.fact_keys) for spec, dim in zip(DIMS, dims, strict=True)]
-    return star_join(_promo_na(sales), pairs)
+    joined to ``dims[i]`` on ``DIMS[i].fact_keys`` (USING: one copy of each
+    key), every dim broadcast explicitly, not left to the size estimator."""
+    out = _promo_na(sales)
+    for spec, dim in zip(DIMS, dims, strict=True):
+        out = out.join(F.broadcast(dim), spec.fact_keys, "inner")
+    return out
 
 
 _WM_TABLE = "audit.fact_load_watermark"
@@ -270,7 +276,7 @@ def _write_watermark(
     merged = dict(marks or {})
     for country, key in batch.items():
         merged[country] = max(merged.get(country, key), key)
-    save_table(local_rows(spark, list(merged.items()), _WM_SCHEMA), _WM_TABLE, mode="overwrite")
+    save_table(local_rows(spark, list(merged.items()), _WM_SCHEMA), _WM_TABLE, overwrite=True)
 
 
 def _apply_fact_watermark(spark, sales: DataFrame) -> DataFrame:
@@ -293,9 +299,10 @@ def _record_fact_watermark(spark, processed: DataFrame) -> None:
 def _batch_delta(
     sales: DataFrame, marks: dict[str, Decimal] | None
 ) -> tuple[DataFrame, int, dict[str, Decimal]]:
-    """The rows of ``sales`` above ``marks``, materialised once: an eager
-    local checkpoint whose job also observes the row count and each
-    country's max key. Returns (rows, row count, {country: max key})."""
+    """The rows of ``sales`` above ``marks`` (all of them without marks),
+    materialised once: an eager local checkpoint whose job also observes
+    the row count and each country's max key. Returns (rows, row count,
+    {country: max key})."""
     key, country = F.col("sales_order_key"), F.col("country")
     maxima = [
         F.max(F.when(country == p.country, key)).alias(p.country)
@@ -350,21 +357,18 @@ def build_fact(spark, sales: DataFrame, dense_fact_keys: bool = True) -> None:
 def run_consumption(
     spark: SparkSession, faithful: bool = True, incremental: bool = False
 ) -> None:
-    """step_5 main(): dims then fact. Dims are always delta loads.
-    ``incremental=True`` builds the dims and the fact from the curated rows
-    above the audit watermark only, materialised once, and then raises the
-    watermark to their maxima, so re-processing curated rows can't
-    duplicate fact rows. A batch with no such rows writes no dim or fact
-    row (the first one still creates the empty watermark table)."""
-    sales = all_sales(spark, faithful)
-    if not incremental:
-        build_dims(spark, sales, faithful)
-        build_fact(spark, sales)
-        return
-    marks = _read_watermark(spark)
-    delta, n, batch = _batch_delta(sales, marks)
+    """step_5 main(): dims then fact, both built from one checkpoint of
+    the curated union (``_batch_delta``), so the union is evaluated once.
+    Dims are always delta loads. ``incremental=True`` keeps only the
+    curated rows above the audit watermark and then raises the watermark
+    to their maxima, so re-processing curated rows can't duplicate fact
+    rows; a one-shot load reads every curated row and keeps no watermark.
+    A run with no such rows writes no dim or fact row (the first
+    incremental one still creates the empty watermark table)."""
+    marks = _read_watermark(spark) if incremental else None
+    delta, n, batch = _batch_delta(all_sales(spark, faithful), marks)
     if n:
         build_dims(spark, delta, faithful)
         build_fact(spark, delta)
-    if n or marks is None:
+    if incremental and (n or marks is None):
         _write_watermark(spark, marks, batch)

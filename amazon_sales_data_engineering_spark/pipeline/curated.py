@@ -37,23 +37,13 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import rank_dedup, rank_dedup_maxjoin
 from ..sources.sinks import save_table_if_nonempty
 from .config import FOREX_TABLE, PROFILES, CountryProfile, curated_table, source_table
 from .parallel import run_concurrently
-
-def curate_sales(
-    spark: SparkSession, cc: str, faithful: bool = True
-) -> DataFrame:
-    """Build (lazily) the curated DataFrame for one country from the
-    catalog's source/common tables."""
-    p = PROFILES[cc]
-    src = spark.table(source_table(cc))
-    forex = spark.table(FOREX_TABLE)
-    return curated_frame(src, forex, p, faithful)
 
 
 def curated_frame(
@@ -63,9 +53,9 @@ def curated_frame(
     faithful: bool = True,
     scale_dedup: bool = False,
 ) -> DataFrame:
-    """Pure source→curated transform on explicit inputs — the same plan
-    ``curate_sales`` builds, usable without catalog tables (e.g. the
-    driver-gated ``pipeline_*`` queries compose it straight off raw files).
+    """Pure source→curated transform on explicit inputs: ``run_curated``
+    applies it to the catalog's tables, the driver-gated ``pipeline_*``
+    queries straight to raw files.
 
     ``scale_dedup=True`` swaps the faithful W1 window for
     ``operators.dedup.rank_dedup_maxjoin`` — the window-free,
@@ -169,7 +159,8 @@ def run_curated(
 def _append_curated(
     spark: SparkSession, cc: str, faithful: bool, incremental: bool
 ) -> None:
-    df = curate_sales(spark, cc, faithful)
+    src, forex = spark.table(source_table(cc)), spark.table(FOREX_TABLE)
+    df = curated_frame(src, forex, PROFILES[cc], faithful)
     target = curated_table(cc)
     if incremental and spark.catalog.tableExists(target):
         existing = spark.table(target)

@@ -18,7 +18,7 @@ from .ingest import ingest_all
 
 def load_forex(spark: SparkSession, data_root: str, faithful: bool = True) -> None:
     fx = forex_table(spark, f"{data_root}/exchange-rate-data.csv", faithful)
-    save_table(fx, FOREX_TABLE, mode="overwrite")
+    save_table(fx, FOREX_TABLE, overwrite=True)
 
 
 def run_pipeline(

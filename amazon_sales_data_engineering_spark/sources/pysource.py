@@ -78,10 +78,6 @@ def register_synthetic_source(spark) -> None:
     spark.dataSource.register(SyntheticRowsDataSource)
 
 
-class _StreamOffset(dict):
-    pass
-
-
 class SyntheticRowsStreamReader(DataSourceStreamReader):
     """Offset-tracked micro-batch reader over the same deterministic row
     space: each micro-batch advances the row cursor by ``rows_per_batch``

@@ -1,6 +1,7 @@
 """Table sinks (SURVEY.md §2.1 S14/S15).
 
-``save_table`` = Snowpark ``df.write.save_as_table(name, mode=...)``
+``save_table`` = Snowpark ``df.write.save_as_table(name, mode=...)`` for
+the two modes the pipeline uses, append and overwrite
 (reference step_4_source_to_curated.py:167-169). A missing table is
 created with ``saveAsTable``. Into an existing table the frame's columns
 are selected by the table's names and inserted (``insertInto``): one SQL
@@ -27,15 +28,16 @@ from pyspark.sql import functions as F
 from ..operators.ckpt import observed_checkpoint
 
 
-def save_table(df: DataFrame, name: str, mode: str = "append") -> None:
-    """Append to (``mode="append"``) or replace (``"overwrite"``) the rows
-    of table ``name``, creating it from ``df`` if it does not exist."""
+def save_table(df: DataFrame, name: str, overwrite: bool = False) -> None:
+    """Append ``df`` to table ``name``, or with ``overwrite=True`` replace
+    its rows, creating the table from ``df`` if it does not exist."""
     spark = df.sparkSession
     if not spark.catalog.tableExists(name):
+        mode = "overwrite" if overwrite else "append"
         df.write.mode(mode).format("parquet").saveAsTable(name)
         return
     cols = spark.table(name).columns
-    df.select(*cols).write.insertInto(name, overwrite=mode == "overwrite")
+    df.select(*cols).write.insertInto(name, overwrite=overwrite)
 
 
 def local_rows(spark: SparkSession, rows: list[tuple], schema: pa.Schema) -> DataFrame:

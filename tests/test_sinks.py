@@ -69,7 +69,7 @@ def test_save_table_into_an_existing_table_matches_columns_by_name(clean):
     assert sorted(map(tuple, spark.table(name).collect())) == [(1, "a"), (2, "b")]
     assert spark.table(name).columns == ["k", "v"]
 
-    save_table(spark.createDataFrame([("c", 3)], "v string, k int"), name, mode="overwrite")
+    save_table(spark.createDataFrame([("c", 3)], "v string, k int"), name, overwrite=True)
     assert [tuple(r) for r in spark.table(name).collect()] == [(3, "c")]
 
 

@@ -8,12 +8,15 @@ whole ``pipeline`` package runs on every test pass:
 1. a faithful one-shot ``run_pipeline``;
 2. an emptied catalog, then two corrected incremental batches through
    ``perfbench/elt.traced_pipeline`` — the call sequence the benchmark
-   makes — the second re-delivering the first batch's orders.
+   makes — the second re-delivering the first batch's orders;
+3. an emptied catalog, then one corrected one-shot ``run_pipeline`` over
+   that same tree, re-delivery included.
 
 After each phase every table's row count must equal DuckDB's
 (``perfbench/oracle.expected_elt_counts``), every dimension's and the
 fact's surrogate keys must be exactly 1..n, and every fact foreign key
-must match exactly one dimension row.
+must match exactly one dimension row. The one-shot phases must leave no
+fact watermark behind.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ from rawgen import RawTree  # noqa: E402
 
 DATES, ROWS = 3, 20
 FACT = "consumption.sales_fact"
+WATERMARK = "audit.fact_load_watermark"
 
 
 def _drop_namespaces(spark) -> None:
@@ -75,6 +79,7 @@ def test_star_schema_bulk_then_incremental(empty_catalog, tmp_path):
     loaded = run_pipeline(spark, bulk.root, faithful=True)
     assert sum(loaded.values()) == len(bulk.files)
     _check_star(spark, bulk.files, faithful=True)
+    assert not spark.catalog.tableExists(WATERMARK)
 
     _drop_namespaces(spark)
     tree = RawTree(str(tmp_path / "trickle"), 2, ROWS, DATES)
@@ -84,3 +89,9 @@ def test_star_schema_bulk_then_incremental(empty_catalog, tmp_path):
         loaded = elt.traced_pipeline(spark, tracer, tree.root, False, True)
         assert sum(loaded.values()) == len(batch)
     _check_star(spark, tree.files, faithful=False)
+
+    _drop_namespaces(spark)
+    loaded = run_pipeline(spark, tree.root, faithful=False)
+    assert sum(loaded.values()) == len(tree.files)
+    _check_star(spark, tree.files, faithful=False)
+    assert not spark.catalog.tableExists(WATERMARK)

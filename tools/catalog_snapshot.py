@@ -13,7 +13,9 @@ same script snapshots any commit. In a fresh temp warehouse it runs:
    then snapshots the catalog and empties it;
 2. ``BATCHES`` corrected incremental batches, one order date each, the
    second also re-delivering the first date's files; then a poll that
-   finds nothing new; then snapshots the catalog again.
+   finds nothing new; then snapshots the catalog and empties it;
+3. a corrected one-shot load of the bulk tree (``run_pipeline`` with
+   ``faithful=False``), then snapshots the catalog a third time.
 
 Per table it records the schema, the row count and an order-insensitive
 digest of every row. The ledger's ``loaded_at`` is left out and the temp
@@ -73,13 +75,16 @@ def snapshot(root: str, seed: int) -> dict:
         spark.sparkContext.setLogLevel("ERROR")
         calls, tables = [], {}
 
+        def drop() -> None:
+            for ns in NAMESPACES:
+                spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+
         bulk = RawTree(f"{tmp}/bulk", seed, BULK_ROWS, BULK_DATES)
         for i in range(BULK_DATES):
             bulk.deliver(i)
         calls.append(["bulk", run_pipeline(spark, bulk.root, faithful=True)])
         tables.update({f"bulk/{k}": v for k, v in _tables(spark, NAMESPACES, tmp).items()})
-        for ns in NAMESPACES:
-            spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+        drop()
 
         tree = RawTree(f"{tmp}/trickle", seed + 1, BATCH_ROWS, BATCHES)
         for i in range(BATCHES):
@@ -90,6 +95,10 @@ def snapshot(root: str, seed: int) -> dict:
             calls.append([f"batch {i}", loaded])
         calls.append(["poll", run_pipeline(spark, tree.root, faithful=False, incremental=True)])
         tables.update({f"trickle/{k}": v for k, v in _tables(spark, NAMESPACES, tmp).items()})
+        drop()
+
+        calls.append(["corrected bulk", run_pipeline(spark, bulk.root, faithful=False)])
+        tables.update({f"corrected/{k}": v for k, v in _tables(spark, NAMESPACES, tmp).items()})
         spark.stop()
         return {"seed": seed, "calls": calls, "tables": tables}
     finally:
